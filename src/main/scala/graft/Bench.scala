@@ -13,7 +13,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // parsed once, so the master URL, the JSON line and the mirror's
+    // file name all carry the same integer ("*" = every core)
+    val cpus = (sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim match {
+      case "*" => Runtime.getRuntime.availableProcessors
+      case n => n.toInt
+    }).toString
     // Shuffle-partition override for scale-proof runs: 32 partitions is
     // right for sf<=0.1 but undersizes sorts at sf10 (~GB partitions
     // spill serially); the driver contract (unset) keeps cpus.

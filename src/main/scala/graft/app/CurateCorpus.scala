@@ -1,7 +1,8 @@
 package graft.app
 
 import graft.operators.{Corpus, Dedup}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus curation — the operator family composed the way a
@@ -11,8 +12,9 @@ import org.apache.spark.sql.functions._
   *   1. quality filter (C4-style rule battery, keep only passing docs)
   *   2. exact dedup (keep the canonical min-id copy per content hash)
   *   3. minhash near-dup (drop the higher-id side of verified pairs)
-  *   4. benchmark decontamination (bloom-prefiltered, exact confirm —
-  *      drop docs overlapping the probe set)
+  *   4. benchmark decontamination (drop docs overlapping the probe
+  *      set — an in-row match against the collected probe grams, the
+  *      bloom-prefiltered exact confirm past the driver bound)
   *   5. hash-stratified sampling (per-language rates, reproducible)
   *   6. context-window chunking + deterministic training-order rank
   *      (the training-ready output)
@@ -26,7 +28,8 @@ import org.apache.spark.sql.functions._
   * Every stage is a narrow filter or a bucket-join — the pipeline
   * inherits each operator's documented 100 TB posture. Stage counts
   * are returned for observability (a silent 90% drop is a data bug,
-  * not a success).
+  * not a success); they are observed on the jobs the run executes
+  * anyway, so counting adds no Spark job.
   */
 object CurateCorpus {
 
@@ -72,38 +75,52 @@ object CurateCorpus {
       implicit spark: SparkSession): StageCounts = {
     require(Set("pairs", "groups", "auto", "jaccard")(dedupMode),
       s"dedupMode must be pairs|groups|auto|jaccard, got $dedupMode")
-    // Each stage output is pinned and materialized by its count —
-    // without the persist, every downstream stage (and the final
-    // write) re-executes the whole upstream chain, making the
-    // pipeline cost quadratic in stages. The counts are wanted for
-    // observability anyway, so materialization is free; caches are
-    // dropped once the chunks are written.
+    // Few Spark jobs per run (each costs driver planning and scheduling
+    // latency that dominates at corpus sizes a driver can plan for):
+    //  - every stage count is an Observation on a node that an action
+    //    the run needs anyway executes exactly once — inside this run's
+    //    own caches (built in full by their first reader) or on the
+    //    final write — never a count() of its own. Nothing may call
+    //    `.rdd` on an observed frame: that leaves its count at 0;
+    //  - only what a later stage reads twice is cached: the exact
+    //    survivors (signatures, the near-dup survivor filter), the
+    //    signature rel (bound, edges) and the sample (the rank's
+    //    bucket-count pass, then the chunking write);
+    //  - every other stage is a filter on the rows themselves or an
+    //    anti-join against a small id set, never a self-join back on
+    //    doc_id. Caches are dropped once the chunks are written.
     val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def stage(df: DataFrame): (DataFrame, Long) = {
-      val c = df.cache(); pinned += c; (c, c.count())
+    def pin(df: DataFrame): DataFrame = { val c = df.cache(); pinned += c; c }
+    val counts = scala.collection.mutable.Map.empty[String, Observation]
+    def observed(df: DataFrame, name: String): DataFrame = {
+      val o = Observation()
+      counts(name) = o
+      df.observe(o, count(lit(1)).as("n"))
     }
+    def countOf(name: String): Long =
+      scala.concurrent.Await.result(counts(name).future,
+        scala.concurrent.duration.Duration(5, "min")).getAs[Long]("n")
     try {
-      val input = docs.count()
-
-      // 1. quality: keep passing doc_ids (filters are narrow — they
-      // reach the scan when the fact is columnar); the optional LM
-      // gate composes here — both are per-doc predicates
-      val qualityIds = Corpus.qualityFilter(docs)
-        .filter(col("keep")).select("doc_id")
-      val keptIds = minLmScore match {
-        case Some(minScore) => qualityIds.join(
+      // 1. quality: the rule battery is a per-doc predicate, filtered in
+      // place; the optional LM gate composes here
+      val flagged = observed(Corpus.qualityFlags(docs), "input")
+      val passing = flagged.filter(col("keep")).select(docs.columns.map(col): _*)
+      val quality = observed(minLmScore match {
+        case Some(minScore) => passing.join(
           Corpus.bigramLmScores(docs)
             .filter(col("lm_score") >= minScore).select("doc_id"),
           "doc_id")
-        case None => qualityIds
-      }
-      val (quality, nQuality) = stage(docs.join(keptIds, "doc_id"))
+        case None => passing
+      }, "quality")
 
-      // 2. exact dedup: canonical copy only
-      val (exact, nExact) = stage(quality.join(
-        Dedup.exactDupGroups(quality)
-          .filter(col("doc_id") === col("canonical_id")).select("doc_id"),
-        "doc_id"))
+      // 2. exact dedup: keep the canonical (min-id) copy per content
+      // hash — [[Dedup.exactDupGroups]]'s survivor rule as one window
+      // over the hash, so the rows never join back to their own ids
+      val exact = pin(observed(quality
+        .withColumn("canonical_id",
+          min("doc_id").over(Window.partitionBy(sha2(col("text"), 256))))
+        .filter(col("doc_id") === col("canonical_id"))
+        .drop("canonical_id"), "exact"))
 
       // 3. near-dup. The pipeline only needs SURVIVORS, so the pair
       // list is an implementation detail — and its volume is
@@ -127,86 +144,93 @@ object CurateCorpus {
       // min-id member: pairs drops every verified doc_b (higher id),
       // groups keeps doc_id == canonical (component min) — identical
       // on mutually-similar families, divergent only on borderline
-      // chains (lshDupGroups scaladoc documents the trade). The pin
-      // hook shares the cached signature rel between the bound
-      // estimate and the chosen operator (plan-identical → one
-      // materialization).
+      // chains (lshDupGroups scaladoc documents the trade). One
+      // signature cache serves the bound and the chosen operator; the
+      // bound's aggregation is its first (single) scan, which also
+      // builds the exact-survivor cache and so completes its count.
+      lazy val sigs = Dedup.minHashSigs(exact, pinned += _, eager = false)
       val dedupChosen = dedupMode match {
         case "auto" =>
-          val budget = math.max(256L * nExact, 1000000L)
-          val bound = Dedup.lshPairBound(exact, pinned += _)
+          val bound = Dedup.pairBoundOf(Dedup.bandRelOf(sigs))
+          val budget = math.max(256L * countOf("exact"), 1000000L)
           val pick = if (bound > budget) "groups" else "pairs"
           graft.operators.Parallelism.logDispatch("CurateCorpus.nearDup",
             s"candidatePairBound=$bound budget=$budget -> $pick")
           pick
         case m => m
       }
-      val (near, nNear) =
-        if (dedupChosen == "jaccard") {
-          // the exact blocked n-gram jaccard EDGE family instead of
-          // minhash pairs — routed by the same measured-statistic
-          // discipline ([[Dedup.jaccardEdgesAuto]]: exact block pairs
-          // within budget, banded star edges beyond — the r12 sf100
-          // refusal turned into a route), then transitive labeling
-          // keeps each component's min-id member (the "groups"
-          // survivor contract)
-          val edges = Dedup.jaccardEdgesAuto(exact, Seq("lang", "source"),
-            n = 3, threshold = 0.6, pin = pinned += _)
-          val comp = Dedup.connectedComponents(edges, "doc_a", "doc_b")
-          val survivors = exact.select("doc_id")
-            .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-            .filter(col("component").isNull || col("doc_id") === col("component"))
-            .select("doc_id")
-          stage(exact.join(survivors, "doc_id"))
-        } else if (dedupChosen == "groups") {
-          val survivors = Dedup.lshDupGroups(exact, 0.6, pinned += _)
-            .filter(col("doc_id") === col("canonical_id"))
-            .select("doc_id")
-          stage(exact.join(survivors, "doc_id"))
-        } else {
-          val dropNear = Dedup.minHashLshPairs(exact, 0.6, pinned += _)
+      // the ids to drop: every non-canonical member of a near-dup
+      // family — usually small next to the corpus, so the survivor
+      // step is an anti-join the planner can broadcast
+      val dropIds = dedupChosen match {
+        case "pairs" =>
+          Dedup.lshPairsFrom(Dedup.bandRelOf(sigs), 0.6, pinned += _,
+            "auto", maxOutputPairs = -1L)
             .select(col("doc_b").as("doc_id")).distinct()
-          stage(exact.join(dropNear, Seq("doc_id"), "left_anti"))
-        }
+        case route =>
+          // groups: star edges over the signature cache (materialized
+          // first unless the auto bound already scanned it — the edge
+          // job reads the band rel on both sides of its join); jaccard:
+          // the exact blocked n-gram jaccard EDGE family, routed by the
+          // same measured-statistic discipline
+          // ([[Dedup.jaccardEdgesAuto]]: exact block pairs within
+          // budget, banded star edges beyond). Transitive labeling then
+          // keeps each component's min-id member.
+          val edges =
+            if (route == "jaccard") Dedup.jaccardEdgesAuto(exact,
+              Seq("lang", "source"), n = 3, threshold = 0.6, pin = pinned += _)
+            else {
+              if (dedupMode != "auto") sigs.count()
+              Dedup.lshStarEdgesFrom(sigs, 0.6)
+            }
+          Dedup.connectedComponents(edges, "doc_a", "doc_b")
+            .filter(col("id") =!= col("component"))
+            .select(col("id").as("doc_id"))
+      }
+      // spread over a fixed width for the gram hashing below: widen's
+      // partition probe (`.rdd`) would run the drop-id stages once here
+      // and again in the job that consumes them
+      val near = observed(exact.join(dropIds, Seq("doc_id"), "left_anti")
+        .repartition(graft.operators.Parallelism.wideN(spark)), "near")
 
-      // 4. decontamination vs the probe set — the bloom-prefiltered
-      // form (the corpus side sees the filter bits, only candidates
-      // reach the exact confirm join; result identical to the exact
-      // broadcast, see CurationOpsSpec); its gram index joins this
-      // run's cache lifecycle via the pin hook
-      val contaminated = Corpus
-        .contaminationCheckBloom(near, probes, n = 5, minMatches = 1,
-          fastGrams = fastGrams, pin = pinned += _)
-        .filter(col("contaminated")).select("doc_id")
-      val (clean, nClean) = stage(near.join(contaminated, Seq("doc_id"), "left_anti"))
+      // 4. decontamination vs the probe set: one bounded collect of the
+      // probe grams, then an in-row match per document
+      // ([[Corpus.decontaminate]]; past its driver bound, an anti-join
+      // against contaminationCheckBloom's bloom + confirm flags — both
+      // paths pinned against that operator in CurateCorpusSpec)
+      val clean = observed(Corpus.decontaminate(near, probes, n = 5,
+        minMatches = 1, fastGrams = fastGrams, pin = pinned += _), "clean")
 
-      // 5. reproducible stratified sample, then the optional per-source
-      // cap (mixing governance — no source may dominate the output)
-      val sampledBase = clean.join(
-        Corpus.hashStratifiedSample(clean, "lang",
-          sampleKeepOf, sampleDefaultKeep, sampleMod).select("doc_id"),
-        "doc_id")
-      val (sampled, nSampled) = stage(maxDocsPerSource match {
-        case Some(cap) => sampledBase.join(
-          Corpus.perSourceCap(sampledBase, cap).select("doc_id"), "doc_id")
+      // 5. reproducible stratified sample (an in-row hash predicate),
+      // then the optional per-source cap (mixing governance — no
+      // source may dominate the output)
+      val sampledBase = clean.filter(Corpus.hashStratifiedKeep("lang",
+        sampleKeepOf, sampleDefaultKeep, sampleMod))
+      val sampled = pin(observed(maxDocsPerSource match {
+        case Some(cap) =>
+          val base = pin(sampledBase)
+          base.join(Corpus.perSourceCap(base, cap).select("doc_id"), "doc_id")
         case None => sampledBase
-      })
+      }, "sampled"))
 
-      // 6. chunk, stamp the deterministic training order (same seed →
-      // same permutation on any cluster; readers shuffle-free by
-      // sorting on train_rank), and write partitioned by language
-      val order = Corpus.shuffleRank(sampled, seed = 42L)
-        .select(col("doc_id"), col("rank").as("train_rank"))
-      val chunks = Corpus.chunkDocuments(sampled, chunkTokens, chunkStride)
-        .join(sampled.select("doc_id", "lang"), "doc_id")
-        .join(order, "doc_id")
-      chunks.write.mode("overwrite")
+      // 6. stamp the deterministic training order (same seed → same
+      // permutation on any cluster; readers shuffle-free by sorting on
+      // train_rank) with the text riding the rank's shuffle, chunk the
+      // ranked rows, and write partitioned by language; the chunk count
+      // is observed on the write itself
+      val ranked = Corpus.shuffleRank(sampled, seed = 42L,
+        carry = Seq("text", "lang"))
+      val chunks = Corpus.chunkDocuments(ranked, chunkTokens, chunkStride,
+        carry = Seq("lang", "rank"))
+        .withColumnRenamed("rank", "train_rank")
+      observed(chunks, "chunks").write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("lang")
         .parquet(outDir)
-      val nChunks = spark.read.parquet(outDir).count()
 
-      StageCounts(input, nQuality, nExact, nNear, nClean, nSampled, nChunks)
+      StageCounts(countOf("input"), countOf("quality"), countOf("exact"),
+        countOf("near"), countOf("clean"), countOf("sampled"),
+        countOf("chunks"))
     } finally pinned.foreach(_.unpersist())
   }
 

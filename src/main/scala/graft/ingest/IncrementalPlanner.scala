@@ -32,13 +32,6 @@ object IncrementalPlanner {
       else None
     }.toSeq
 
-  /** `outputExists` for a `date=`-partitioned parquet output dir. */
-  def partitionExists(spark: SparkSession, outputRoot: String): LocalDate => Boolean = {
-    val fs = new Path(outputRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    d => fs.exists(new Path(outputRoot, s"date=$d"))
-  }
-
   /** One-listing fleet form: a single two-level partition glob
     * (cluster=STAR/date=STAR) replaces
     * O(clusters × days) sequential `fs.exists` round-trips (each a

@@ -65,16 +65,27 @@ object Corpus {
     * dedup-then-sample agree). A pure narrow filter: pushes to the
     * scan, no shuffle, no state. */
   def hashStratifiedSample(docs: DataFrame, strataCol: String,
-      keepOf: Map[String, Long], defaultKeep: Long, mod: Long): DataFrame = {
-    val keep = keepOf.foldLeft(lit(defaultKeep)) { case (acc, (k, v)) =>
+      keepOf: Map[String, Long], defaultKeep: Long, mod: Long): DataFrame =
+    docs
+      .withColumn("bucket", sampleBucket(mod))
+      .filter(col("bucket") < sampleKeepCount(strataCol, keepOf, defaultKeep))
+      .select(col("doc_id"), col(strataCol), col("bucket"))
+
+  /** [[hashStratifiedSample]]'s keep decision as a row predicate over
+    * `text` and `strataCol`, for callers that filter their own rows in
+    * place instead of joining the sampled ids back. */
+  def hashStratifiedKeep(strataCol: String, keepOf: Map[String, Long],
+      defaultKeep: Long, mod: Long): Column =
+    sampleBucket(mod) < sampleKeepCount(strataCol, keepOf, defaultKeep)
+
+  private def sampleBucket(mod: Long): Column =
+    pmod(HashExpressions.polyHash(col("text")), lit(mod))
+
+  private def sampleKeepCount(strataCol: String, keepOf: Map[String, Long],
+      defaultKeep: Long): Column =
+    keepOf.foldLeft(lit(defaultKeep)) { case (acc, (k, v)) =>
       when(col(strataCol) === k, lit(v)).otherwise(acc)
     }
-    docs
-      .withColumn("bucket",
-        pmod(HashExpressions.polyHash(col("text")), lit(mod)))
-      .filter(col("bucket") < keep)
-      .select(col("doc_id"), col(strataCol), col("bucket"))
-  }
 
   /** Top-k characteristic terms per document by TF-IDF, with the IDF
     * kept RATIONAL: score = tf·N / df (one exact integer product, one
@@ -109,7 +120,14 @@ object Corpus {
     * flag plus the conjunctive keep decision, so downstream can audit
     * which rule rejected a document. All signals are exact counts or
     * exact-integer ratios. */
-  def qualityFilter(docs: DataFrame): DataFrame = {
+  def qualityFilter(docs: DataFrame): DataFrame =
+    qualityFlags(docs)
+      .select("doc_id", "n_words", "mean_wl", "n_stop", "pass_len",
+        "pass_word_len", "pass_stop", "pass_rep", "keep")
+
+  /** [[qualityFilter]]'s signals appended to every column of `docs`,
+    * so a caller can filter its own rows on `keep` in place. */
+  def qualityFlags(docs: DataFrame): DataFrame = {
     val stops = array(StopWords.map(lit): _*)
     docs
       .withColumn("tk", tokens(col("text")))
@@ -127,8 +145,7 @@ object Corpus {
       .withColumn("keep",
         col("pass_len") && col("pass_word_len") && col("pass_stop") &&
           col("pass_rep"))
-      .select("doc_id", "n_words", "mean_wl", "n_stop", "pass_len",
-        "pass_word_len", "pass_stop", "pass_rep", "keep")
+      .drop("tk", "n_distinct", "sum_wl")
   }
 
   /** Sketch-accuracy evaluation: minhash-estimated jaccard
@@ -207,8 +224,10 @@ object Corpus {
     * is the possibly-short remainder; empty docs yield no chunks. A
     * pure narrow generate (explode of in-row slices): no shuffle, no
     * state, scales linearly. Output: doc_id, chunk_idx, chunk_text,
-    * n_tokens. */
-  def chunkDocuments(docs: DataFrame, chunkTokens: Int, stride: Int): DataFrame = {
+    * n_tokens, then the `carry` columns of `docs` copied onto each of
+    * the document's chunks. */
+  def chunkDocuments(docs: DataFrame, chunkTokens: Int, stride: Int,
+      carry: Seq[String] = Nil): DataFrame = {
     require(stride > 0 && chunkTokens > 0, "positive chunk/stride")
     docs
       .withColumn("tk", tokens(col("text")))
@@ -218,11 +237,12 @@ object Corpus {
       .withColumn("chunk_tk",
         slice(col("tk"), col("start") + 1, lit(chunkTokens)))
       .filter(size(col("chunk_tk")) > 0)
-      .select(
+      .select(Seq(
         col("doc_id"),
         (col("start") / stride).cast("long").as("chunk_idx"),
         concat_ws(" ", col("chunk_tk")).as("chunk_text"),
-        size(col("chunk_tk")).cast("long").as("n_tokens"))
+        size(col("chunk_tk")).cast("long").as("n_tokens")) ++
+        carry.map(col): _*)
   }
 
   /** Benchmark decontamination: flag corpus documents sharing ≥
@@ -295,9 +315,7 @@ object Corpus {
       pin: DataFrame => Unit = OperatorCaches.register,
       fastGrams: Boolean = false): DataFrame = {
     def grams(c: Column) = gramHashesOf(c, n, fastGrams)
-    val probeG = probes
-      .select(explode(grams(col("text"))).as("g"))
-      .distinct()
+    val probeG = probeGramTable(probes, grams)
     // Empty benchmark ⇒ nothing can be contaminated. Checked explicitly
     // because DataFrameStatFunctions.bloomFilter NPEs on zero rows
     // (null internal buffer), and the run-the-app-with-no-benchmark
@@ -309,6 +327,61 @@ object Corpus {
         .withColumn("n_matched", lit(0L))
         .withColumn("contaminated", col("n_matched") >= minMatches)
     }
+    bloomConfirm(Parallelism.widen(docs), probeG, grams, minMatches, fpp, pin)
+  }
+
+  /** The documents of `docs` (all columns) that [[contaminationCheckBloom]]
+    * does NOT flag — decontamination as a filter. A benchmark is small
+    * by definition, so ONE bounded narrow scan usually collects its
+    * whole gram set: empty ⇒ `docs` unchanged; otherwise every
+    * document is matched in-row against the distinct set, with no
+    * bloom filter and no join — one narrow pass over `docs` in its own
+    * partitioning (callers spread a narrow input first). Past
+    * 10⁶ probe grams (repeats included — 8 MB of longs, below Spark's
+    * default broadcast and result-size limits), `docs` anti-joins the
+    * flagged ids of [[contaminationCheckBloom]]'s bloom + confirm
+    * path, run on `docs` as given: `Parallelism.widen` would call
+    * `.rdd` on it, which leaves an Observation on `docs` reading 0. */
+  def decontaminate(docs: DataFrame, probes: DataFrame, n: Int,
+      minMatches: Int, fpp: Double = 0.01,
+      pin: DataFrame => Unit = OperatorCaches.register,
+      fastGrams: Boolean = false): DataFrame = {
+    def grams(c: Column) = gramHashesOf(c, n, fastGrams)
+    val spark = probes.sparkSession
+    import spark.implicits._
+    val raw = probes.select(explode(grams(col("text")))).as[Long]
+      .limit(DriverProbeGrams + 1).collect()
+    if (raw.isEmpty) docs
+    else if (raw.length <= DriverProbeGrams)
+      docs.filter(matchedGrams(grams(col("text")), raw.distinct) < minMatches)
+    else docs.join(
+      bloomConfirm(docs, probeGramTable(probes, grams), grams, minMatches,
+        fpp, pin).filter(col("contaminated")).select("doc_id"),
+      Seq("doc_id"), "left_anti")
+  }
+
+  /** Most probe grams [[decontaminate]] holds on the driver. */
+  private val DriverProbeGrams = 1000000
+
+  /** Count of `grams` elements in `pg` (a hash-set lookup per element). */
+  private def matchedGrams(grams: Column, pg: Array[Long]): Column = {
+    val set: Set[Any] = pg.toSet
+    size(filter(grams, g => org.apache.spark.sql.graftbridge.ColumnBridge
+      .column(org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(g), set))))
+      .cast("long")
+  }
+
+  private def probeGramTable(probes: DataFrame,
+      grams: Column => Column): DataFrame =
+    probes.select(explode(grams(col("text"))).as("g")).distinct()
+
+  /** [[contaminationCheckBloom]] over a non-empty probe gram table
+    * `probeG`: a bloom filter over it prefilters the corpus grams, and
+    * an exact join confirms the candidates. */
+  private def bloomConfirm(docs: DataFrame, probeG: DataFrame,
+      grams: Column => Column, minMatches: Int, fpp: Double,
+      pin: DataFrame => Unit): DataFrame = {
     // driver-side build over the benchmark side (small by definition —
     // the corpus side is never collected)
     val bf = probeG.stat.bloomFilter("g", 100000L, fpp)
@@ -323,7 +396,7 @@ object Corpus {
     // the whole operator's cost. At 100 TB this intermediate is the
     // gram INDEX a pipeline materializes to disk once per corpus
     // version, exactly like the minhash band index.
-    val g = Parallelism.widen(docs)
+    val g = docs
       .select(col("doc_id"), grams(col("text")).as("grams"))
       .cache()
     pin(g)
@@ -545,30 +618,44 @@ object Corpus {
     * squaring still leaves adjacent runs when the hash lands near
     * P/2). All integer arithmetic — an external SQL engine reproduces
     * the permutation exactly (q74's oracle) — with doc_id as
-    * tiebreak. The global rank
-    * is NOT a global window (single-partition sort — the q04 anti-
-    * pattern): rows are range-partitioned on the key, sorted within
-    * partitions, and ranked two-phase à la `zipWithIndex` — count per
-    * partition, prefix-sum the offsets on the driver (numPartitions
-    * longs, not data), add the local index. One range shuffle total,
-    * every stage parallel. Output: doc_id, shuffle_key, rank (1-based). */
-  def shuffleRank(docs: DataFrame, seed: Long): DataFrame = {
-    val spark = docs.sparkSession
+    * tiebreak. The global rank is NOT a global window
+    * (single-partition sort — the q04 anti-pattern): the key is
+    * uniform on [0, P) with P < 2³⁰, so its top b bits split it into
+    * ~0.93·2ᵇ ordered buckets of near-equal size, b sized to ~8
+    * buckets per shuffle partition (2¹⁰ to 2¹⁶ buckets). One
+    * aggregation counts rows per bucket and the driver prefix-sums
+    * those counts (2ᵇ longs, not data); a row's rank is its bucket's
+    * offset plus its row_number within the bucket in (key, doc_id)
+    * order — a window partitioned by bucket, as wide as the session's
+    * shuffle, so every stage stays parallel. Both passes
+    * are SQL, so the count pass is an action that completes any
+    * Observation on `docs`. Output: doc_id, shuffle_key, the `carry`
+    * columns of `docs`, rank (1-based) — carrying the payload spares
+    * a caller the join back on doc_id. */
+  def shuffleRank(docs: DataFrame, seed: Long,
+      carry: Seq[String] = Nil): DataFrame = {
     val P = 1000000007L
     val h = HashExpressions.polyHash(
       concat_ws(":", lit(seed.toString), col("doc_id").cast("string")))
     val h2 = pmod(h * h, lit(P))
+    val width = 8L * Parallelism.wideN(docs.sparkSession)
+    val bits = math.min(16, math.max(10,
+      64 - java.lang.Long.numberOfLeadingZeros(width - 1))) // ⌈log₂ width⌉
+    val bucketBits = 30 - bits // 30-bit key → 2^bits buckets
     val keyed = docs
-      .select(col("doc_id"), pmod(h2 * h2, lit(P)).as("shuffle_key"))
-      .repartitionByRange(col("shuffle_key"), col("doc_id"))
-      .sortWithinPartitions("shuffle_key", "doc_id")
-    val ranked = keyed.rdd.zipWithIndex().map { case (r, i) =>
-      org.apache.spark.sql.Row(r.getLong(0), r.getLong(1), i + 1L)
-    }
-    spark.createDataFrame(ranked,
-      org.apache.spark.sql.types.StructType(keyed.schema.fields :+
-        org.apache.spark.sql.types.StructField(
-          "rank", org.apache.spark.sql.types.LongType, nullable = false)))
+      .select(Seq(col("doc_id"), pmod(h2 * h2, lit(P)).as("shuffle_key")) ++
+        carry.map(col): _*)
+      .withColumn("rank_bucket", shiftright(col("shuffle_key"), bucketBits))
+    val perBucket = new Array[Long](1 << bits)
+    keyed.groupBy("rank_bucket").count().collect()
+      .foreach(r => perBucket(r.getLong(0).toInt) = r.getLong(1))
+    val offsets = perBucket.scanLeft(0L)(_ + _).init
+    keyed
+      .withColumn("rank",
+        element_at(typedLit(offsets), col("rank_bucket").cast("int") + 1) +
+          row_number().over(Window.partitionBy("rank_bucket")
+            .orderBy("shuffle_key", "doc_id")))
+      .drop("rank_bucket")
   }
 
   /** Exact token-budget prefix of the deterministic shuffle order —
@@ -583,9 +670,9 @@ object Corpus {
     * The global running sum is NOT a global window: rows are
     * range-partitioned on the key, per-partition token sums (one long
     * each) prefix-sum on the driver, and a second narrow pass adds
-    * each partition's offset to its local cumsum — the
-    * [[shuffleRank]] zipWithIndex trick generalized from counts to
-    * sums. One range shuffle total; every stage parallel. Output
+    * each partition's offset to its local cumsum — the `zipWithIndex`
+    * trick generalized from counts to sums. One range shuffle total;
+    * every stage parallel. Output
     * (selected docs only): doc_id, shuffle_key, n_tok, cum_tokens
     * (inclusive). */
   def tokenBudgetPrefix(docs: DataFrame, budget: Long, seed: Long): DataFrame = {

@@ -103,8 +103,13 @@ object Dedup {
     * past its budget — see [[graft.app.CurateCorpus]] `dedupMode`. */
   def lshPairBound(docs: DataFrame,
       pin: DataFrame => Unit = OperatorCaches.register): Long =
-    minHashBandRel(docs, pin)
-      .groupBy("band_idx", "band_hash").agg(count(lit(1)).as("n"))
+    // lazy: the bound's one aggregation is a single scan of the rel,
+    // which populates the signature cache for the caller's next step
+    pairBoundOf(minHashBandRel(docs, pin, eager = false))
+
+  /** [[lshPairBound]] over an existing band rel. */
+  private[graft] def pairBoundOf(bandRel: DataFrame): Long =
+    bandRel.groupBy("band_idx", "band_hash").agg(count(lit(1)).as("n"))
       .agg(coalesce(sum(col("n") * (col("n") - 1) / 2), lit(0L))
         .cast("long"))
       .head.getLong(0)
@@ -144,17 +149,22 @@ object Dedup {
     * gate/analysis shape, where the pair list IS the product). */
   def minHashLshPairs(docs: DataFrame, threshold: Double,
       pin: DataFrame => Unit, strategy: String,
-      maxOutputPairs: Long = -1L): DataFrame = {
+      maxOutputPairs: Long = -1L): DataFrame =
     // lazy band rel: every path below starts with a single-job full
     // scan (guard bound / auto stats / forced-carry fit count / tiled
     // per-block counts) that populates the signature cache — the
     // eager count job is redundant here
-    val bandRel = minHashBandRel(docs, pin, eager = false)
+    lshPairsFrom(minHashBandRel(docs, pin, eager = false), threshold, pin,
+      strategy, maxOutputPairs)
+
+  /** [[minHashLshPairs]] over an existing band rel (shared with a
+    * caller that already scanned it, e.g. for [[pairBoundOf]]). */
+  private[graft] def lshPairsFrom(bandRel: DataFrame, threshold: Double,
+      pin: DataFrame => Unit, strategy: String,
+      maxOutputPairs: Long): DataFrame = {
+    val spark = bandRel.sparkSession
     if (maxOutputPairs > 0L) {
-      val bound = bandRel.groupBy("band_idx", "band_hash")
-        .agg(count(lit(1)).as("n"))
-        .agg(coalesce(sum(col("n") * (col("n") - 1) / 2), lit(0L))
-          .cast("long")).head.getLong(0)
+      val bound = pairBoundOf(bandRel)
       if (bound > maxOutputPairs) {
         Parallelism.logDispatch("minHashLshPairs",
           s"candidatePairBound=$bound > maxOutputPairs=$maxOutputPairs " +
@@ -181,7 +191,7 @@ object Dedup {
         // carry needs BOTH: pair volume under the per-task target AND
         // the unspillable per-partition hash build to fit the
         // execution pool (SigRowBytes ≈ the ~3.8 KB shingle array)
-        val fits = Parallelism.hashBuildFits(total, SigRowBytes, docs.sparkSession)
+        val fits = Parallelism.hashBuildFits(total, SigRowBytes, spark)
         val pick = if (mx <= 2e7.toLong && fits) "carry" else "tiled"
         Parallelism.logDispatch("minHashLshPairs",
           s"maxBucketPairs=$mx buildRows=$total buildFits=$fits -> $pick")
@@ -211,7 +221,7 @@ object Dedup {
     // cached signature rel — trivial.
     val carryFits = strategy != "carry" || {
       val total = bandRel.count()
-      val fits = Parallelism.hashBuildFits(total, SigRowBytes, docs.sparkSession)
+      val fits = Parallelism.hashBuildFits(total, SigRowBytes, spark)
       if (!fits) Parallelism.logDispatch("minHashLshPairs",
         s"forced carry: buildRows=$total won't fit — " +
           "shuffle_hash hint dropped (sort-merge spills)")
@@ -261,9 +271,17 @@ object Dedup {
     * job, so the separate count job (plus one extra cached-scan pass)
     * is pure overhead. Callers whose first consumer schedules two
     * concurrent scan stages over the rel (e.g. [[lshDupGroups]]'s
-    * verify-attach joins inside the CC edge job) must keep the eager
-    * default. */
+    * star-edge join, which reads the rel on both sides) must keep the
+    * eager default. */
   def minHashBandRel(docs: DataFrame,
+      pin: DataFrame => Unit = OperatorCaches.register,
+      eager: Boolean = true): DataFrame =
+    bandRelOf(minHashSigs(docs, pin, eager))
+
+  /** The cached signature intermediate behind [[minHashBandRel]]: one
+    * row per document (doc_id, hs, bands); same `pin`/`eager`
+    * contract. */
+  private[graft] def minHashSigs(docs: DataFrame,
       pin: DataFrame => Unit = OperatorCaches.register,
       eager: Boolean = true): DataFrame = {
     val sigs = Parallelism.widen(docs)
@@ -273,9 +291,13 @@ object Dedup {
       .cache()
     pin(sigs)
     if (eager) sigs.count()
+    sigs
+  }
+
+  /** The band rel of a [[minHashSigs]] cache. */
+  private[graft] def bandRelOf(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"), col("hs"),
       posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-  }
 
   /** Incremental near-dup detection — the production shape of minhash
     * dedup at 100 TB: a daily increment must NOT re-pair the whole
@@ -306,9 +328,13 @@ object Dedup {
     // work; the increment is never paired against corpus-corpus (the
     // bipartite kernel keeps that property: corpus rows are never
     // probe-side).
-    // lazy as in minHashLshPairs: the guard/stats/fit/kernel pass is
-    // always the first action and populates the cache in one job
-    val newBands = minHashBandRel(newDocs, pin, eager = false)
+    // lazy as in minHashLshPairs where the guard/stats/fit pass is the
+    // first action (a single scan that populates the cache); a forced
+    // "tiled" call without the guard goes straight to the bipartite
+    // kernel, whose first job scans the increment on BOTH sides (a-rel
+    // and the b-side union), so there the rel is materialized eagerly
+    val newBands = minHashBandRel(newDocs, pin,
+      eager = strategy == "tiled" && maxOutputPairs <= 0L)
     if (maxOutputPairs > 0L) {
       // same guard as minHashLshPairs, bipartite form: candidates per
       // bucket are na·nbCorpus (increment × indexed corpus) plus
@@ -440,8 +466,8 @@ object Dedup {
     */
   def lshDupGroups(docs: DataFrame, threshold: Double,
       pin: DataFrame => Unit = OperatorCaches.register): DataFrame = {
-    val bandRel = minHashBandRel(docs, pin)
-    val edges = lshStarEdgesFrom(bandRel, threshold)
+    // eager: the star-edge job's first stages scan the band rel twice
+    val edges = lshStarEdgesFrom(minHashSigs(docs, pin), threshold)
     val comp = connectedComponents(edges, "doc_a", "doc_b")
     val sizes = comp.groupBy("component")
       .agg(count(lit(1)).as("cluster_size"))
@@ -458,28 +484,30 @@ object Dedup {
     * union with exact-dup edges, then connected components): per
     * minhash band bucket, members connect to the bucket's min doc_id
     * (≤ nBands·N edges regardless of skew), verified with exact
-    * jaccard on the distinct shingle-hash sets. Output: (doc_a, doc_b)
-    * directed high→low id. */
+    * jaccard on the distinct shingle-hash sets. Output: distinct
+    * (doc_a, doc_b) directed high→low id. */
   def lshStarEdges(docs: DataFrame, threshold: Double,
       pin: DataFrame => Unit = OperatorCaches.register): DataFrame =
-    lshStarEdgesFrom(minHashBandRel(docs, pin), threshold)
+    lshStarEdgesFrom(minHashSigs(docs, pin), threshold)
 
-  private def lshStarEdgesFrom(bandRel: DataFrame,
+  /** [[lshStarEdges]] over a [[minHashSigs]] cache. Each bucket's
+    * representative travels with its shingle set — min over
+    * (doc_id, hs) structs orders by doc_id first — so every member row
+    * verifies against it right in the join, and no per-doc signature
+    * lookup joins follow. A member meeting the same representative in
+    * several bands is verified once per band; the distinct on the slim
+    * verified pairs is the only other exchange. */
+  private[graft] def lshStarEdgesFrom(sigs: DataFrame,
       threshold: Double): DataFrame = {
+    val bandRel = bandRelOf(sigs)
     val reps = bandRel.groupBy("band_idx", "band_hash")
-      .agg(min("doc_id").as("rep"))
-    val cand = bandRel.select("band_idx", "band_hash", "doc_id")
-      .join(reps, Seq("band_idx", "band_hash"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("doc_id").as("doc_a"), col("rep").as("doc_b"))
-      .distinct()
-    val sigs = bandRel.select("doc_id", "hs").dropDuplicates("doc_id")
-    cand
-      .join(sigs.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
-      .join(sigs.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .filter(HashExpressions.sortedJaccardGeq(col("hs_a"), col("hs_b"),
+      .agg(min(struct(col("doc_id"), col("hs"))).as("rep"))
+    bandRel.join(reps, Seq("band_idx", "band_hash"))
+      .filter(col("doc_id") =!= col("rep.doc_id"))
+      .filter(HashExpressions.sortedJaccardGeq(col("hs"), col("rep.hs"),
         threshold) >= threshold)
-      .select("doc_a", "doc_b")
+      .select(col("doc_id").as("doc_a"), col("rep.doc_id").as("doc_b"))
+      .distinct()
   }
 
   /** Near-dup EDGES for transitive labeling, ROUTED — the q48-class
@@ -1324,7 +1352,7 @@ object Dedup {
     // out-of-contract input — the driver union-find unboxed a null id
     // to 0L (merging those rows into node 0's component) while the
     // distributed loop silently dropped null-keyed join messages.
-    val sym = edges
+    val symAll = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(explode(array(
         struct(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b")),
@@ -1332,72 +1360,54 @@ object Dedup {
         .as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .distinct()
-      // pin the cached edges on the join key: every round's
-      // sym.b ⋈ labels.id then needs NO exchange on either side (the
-      // cache reports hash(b) partitioning, the checkpointed labels
-      // keep the hash(id) partitioning of the groupBy that built
-      // them) — one shuffle per round (the message groupBy) instead
-      // of three
-      .repartition(col("b"))
+      // cached so that the distributed path re-reads the edge set the
+      // bounded collect below already computed, instead of recomputing
+      // the (possibly expensive) edge input
       .cache()
     // Small-graph fast path (r17): the distributed loop costs ~2 s of
     // pure fixed latency at gate scale (6+ driver round-trips, 2
     // shuffles/round) on graphs of a few THOUSAND edges whose exact
     // min-label components a driver union-find computes in
     // milliseconds. The dispatch is scale-adaptive and BOUNDED — the
-    // cellProbeTable discipline: collect at most `smallGraphEdges`
-    // symmetrized rows (default 200 k — ~3 MB serialized, the
-    // maxResultSize-relevant figure; the typed driver-heap footprint
-    // is ~48 B/edge ≈ 10 MB of boxed tuples at the bound), past which
-    // the distributed loop runs untouched (a 100 TB near-dup edge set
-    // is O(nBands·N) and blows the bound immediately). Identical
-    // output by construction: union-find with min-root labeling
-    // computes the same (id, min id reachable) fixpoint the
-    // propagation loop converges to, for every node appearing in
-    // `edges` — spec-pinned against the forced distributed path
-    // (JoinOpsSpec "small-graph fast path ≡ forced distributed").
-    val nSym = sym.count() // also materializes the cached edge rel
-    if (nSym <= smallGraphEdges) {
-      Parallelism.logDispatch("connectedComponents",
-        s"symEdges=$nSym <= smallGraphEdges=$smallGraphEdges " +
-          "-> driver union-find (bounded small-graph fast path)")
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
+    // cellProbeTable discipline: ONE collect of at most
+    // `smallGraphEdges` + 1 symmetrized rows (default 200 k — ~3 MB
+    // serialized, the maxResultSize-relevant figure; the typed
+    // driver-heap footprint is ~48 B/edge ≈ 10 MB of boxed tuples at
+    // the bound) both decides the path and feeds it; past the bound the
+    // distributed loop runs untouched (a 100 TB near-dup edge set is
+    // O(nBands·N) and blows the bound immediately). Identical output by
+    // construction: union-find with min-root labeling computes the same
+    // (id, min id reachable) fixpoint the propagation loop converges
+    // to, for every node appearing in `edges` — spec-pinned against the
+    // forced distributed path (JoinOpsSpec "small-graph fast path ≡
+    // forced distributed").
+    if (smallGraphEdges > 0L) {
       // typed collect (primitive-pair encoder), not Row collect: the
       // serialized result is ~16 B/edge so the stated ~3 MB bound is
       // honest, and the driver holds tuples instead of heavier
       // InternalRow-backed Rows
       val spark0 = edges.sparkSession
       import spark0.implicits._
-      val rows = sym.select(col("a"), col("b")).as[(Long, Long)]
-        .collect() // bounded: nSym <= smallGraphEdges
-      Parallelism.logDispatch("connectedComponents",
-        s"fast-path collect: $nSym edges ≈ ${nSym * 16 / 1024} KiB serialized")
-      var ri = 0
-      while (ri < rows.length) {
-        val (a, b) = rows(ri); ri += 1
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val (ra, rb) = (find(a), find(b))
-        // min root wins, so the final root of every tree IS the
-        // component's min id (roots only ever decrease)
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
+      val rows = symAll.as[(Long, Long)]
+        .limit(math.min(smallGraphEdges, Int.MaxValue - 1L).toInt + 1)
+        .collect()
+      if (rows.length <= smallGraphEdges) {
+        Parallelism.logDispatch("connectedComponents",
+          s"symEdges=${rows.length} <= smallGraphEdges=$smallGraphEdges " +
+            "-> driver union-find (bounded small-graph fast path)")
+        symAll.unpersist()
+        return spark0.createDataset(unionFindLabels(rows)).toDF("id", "component")
       }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-      val ks = parent.keySet().iterator()
-      while (ks.hasNext) { val k = ks.next(); out += ((k, find(k))) }
-      sym.unpersist()
-      return spark0.createDataset(out.toSeq).toDF("id", "component")
     }
+    // pin the cached edges on the join key: every round's
+    // sym.b ⋈ labels.id then needs NO exchange on either side (the
+    // cache reports hash(b) partitioning, the checkpointed labels
+    // keep the hash(id) partitioning of the groupBy that built
+    // them) — one shuffle per round (the message groupBy) instead
+    // of three
+    val sym = symAll.repartition(col("b")).cache()
     Parallelism.logDispatch("connectedComponents",
-      s"symEdges=$nSym > smallGraphEdges=$smallGraphEdges " +
+      s"symEdges > smallGraphEdges=$smallGraphEdges " +
         "-> distributed min-label propagation")
     // initial labels with the first propagation round folded in:
     // component₀ = min(self, neighbors) — same cost as the bare
@@ -1422,6 +1432,9 @@ object Dedup {
       Option(df.agg(sum("component")).first().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
     var prevSum = labelSum(labels)
+    // that probe built `sym` in full, so the unpartitioned copy goes
+    // now instead of riding every propagation round
+    symAll.unpersist()
     var converged = prevSum == 0L // empty edge set
     // Half-shuffle round (r18): the former labels.union(msgs).groupBy
     // shape re-shuffled the full label set alongside the messages
@@ -1502,6 +1515,35 @@ object Dedup {
         s"$shortcutIter pointer-jumping rounds — refusing to return " +
         "possibly-mislabeled components")
     labels
+  }
+
+  /** (id, min id reachable) for every node of a symmetrized edge list,
+    * by union-find on the driver — [[connectedComponents]]' small-graph
+    * path. */
+  private def unionFindLabels(rows: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x // path compression
+      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    var ri = 0
+    while (ri < rows.length) {
+      val (a, b) = rows(ri); ri += 1
+      if (!parent.containsKey(a)) parent.put(a, a)
+      if (!parent.containsKey(b)) parent.put(b, b)
+      val (ra, rb) = (find(a), find(b))
+      // min root wins, so the final root of every tree IS the
+      // component's min id (roots only ever decrease)
+      if (ra < rb) parent.put(rb, ra)
+      else if (rb < ra) parent.put(ra, rb)
+    }
+    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
+    val ks = parent.keySet().iterator()
+    while (ks.hasNext) { val k = ks.next(); out += ((k, find(k))) }
+    out.toSeq
   }
 
   /** Fuzzy duplicate pairs by bounded edit distance — the
@@ -1791,44 +1833,5 @@ object Dedup {
       .na.fill(0L, Seq("n_dups"))
       .withColumn("is_dup", col("n_dups") > 0)
       .select("vec_id", "cell", "n_dups", "max_cosine", "is_dup")
-  }
-
-  /** SimHash near-duplicate pairs: all (doc_a < doc_b) with Hamming
-    * distance ≤ `maxHamming` between 30-bit signatures.
-    *
-    * Candidates come from a band bucket-join (the signature split into
-    * `nBands` bit-slices; a pair is considered iff some slice matches
-    * exactly). Unlike minhash banding this is LOSSLESS: `maxHamming`
-    * differing bits can dirty at most `maxHamming` bands, so with
-    * `maxHamming < nBands` the pigeonhole principle guarantees a clean
-    * shared band for every qualifying pair — the operator returns
-    * EXACTLY the Hamming-ball pairs while the shuffle stays a bucket
-    * equi-join, never all-pairs (the brute-force oracle returns the
-    * identical set). Output: doc_a, doc_b, hamming. */
-  def simHashNearDupPairs(docs: DataFrame, maxHamming: Int,
-      nBands: Int = 5): DataFrame = {
-    val bits = 30
-    require(maxHamming < nBands, "pigeonhole completeness needs maxHamming < nBands")
-    require(bits % nBands == 0, s"$nBands bands must divide $bits bits")
-    val per = bits / nBands
-    val mask = (1L << per) - 1
-    val sigs = simHashSignatures(docs).select(col("doc_id"), col("simhash"))
-    val bandCols = (0 until nBands).map(b =>
-      shiftright(col("simhash"), b * per).bitwiseAND(lit(mask)))
-    val eb = sigs
-      .withColumn("bnds", array(bandCols: _*))
-      .select(col("doc_id"), col("simhash"),
-        posexplode(col("bnds")).as(Seq("band_idx", "band_hash")))
-    val a = eb.select(col("band_idx"), col("band_hash"),
-      col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
-    val b = eb.select(col("band_idx"), col("band_hash"),
-      col("doc_id").as("doc_b"), col("simhash").as("sh_b"))
-    a.join(b, Seq("band_idx", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming",
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
-      .distinct()
   }
 }

@@ -787,22 +787,6 @@ object Multimodal {
           maxPostings, stride)
     }
 
-  /** Blue/green form of [[writeFrameIndexBucketed]]'s REBUILD path
-    * ([[VersionedTable.rebuild]]): the slim index's consumer is the
-    * nightly batch join, not a running stream, so the direct overwrite
-    * was an acceptable documented convention — but the versioned form
-    * costs nothing and removes the half-written window for any reader
-    * that resolves the table mid-rebuild. Append-mode maintenance
-    * (folding an ingest window in) still goes through
-    * [[writeFrameIndexBucketed]] directly on the CURRENT versioned
-    * table; a content update requires this rebuild, as ever. */
-  def writeFrameIndexBucketedVersioned(sets: DataFrame, table: String,
-      buckets: Int, path: Option[String] = None): String =
-    VersionedTable.rebuild(sets.sparkSession, table, path) {
-      (vTable, vPath) =>
-        writeFrameIndexBucketed(sets, vTable, buckets, vPath)
-    }
-
   /** Incremental frame-set near-dup — the production maintenance path
     * of [[videoNearDupPairs]] at 100 TB (the
     * [[Dedup.incrementalNearDupPairs]] discipline, media form): a

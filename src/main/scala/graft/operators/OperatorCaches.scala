@@ -48,7 +48,4 @@ object OperatorCaches {
     }
     n
   }
-
-  /** Registered-but-unreleased count (test/diagnostic surface). */
-  def pendingCount: Int = reg.size()
 }

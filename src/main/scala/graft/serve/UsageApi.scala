@@ -123,8 +123,10 @@ final class UsageApi(fact0: DataFrame, refreshMode: String = "clear")(
       t
     })
 
-  /** Ingest hook: new data arrived (`usage_loader.rb:195-196`). In the
-    * default `"clear"` mode this is the reference's `clear_cache` →
+  /** Ingest hook: new data arrived (`usage_loader.rb:195-196`). The
+    * fact's files are re-listed first, so files landed since the last
+    * listing are served. In the default `"clear"` mode this is the
+    * reference's `clear_cache` →
     * `invalidate_all`: every memo (responses, rendered bytes, bounds)
     * is dropped and the next request of each shape recomputes cold. In
     * `"swr"` mode the memoized entries stay servable while the single
@@ -132,6 +134,7 @@ final class UsageApi(fact0: DataFrame, refreshMode: String = "clear")(
     * their rendered bytes); new (unmemoized) request shapes arriving
     * mid-refresh compute fresh either way. */
   def invalidate(): Unit = {
+    refreshSources()
     fact.unpersist()
     fact.cache()
     if (refreshMode == "clear") {
@@ -164,6 +167,23 @@ final class UsageApi(fact0: DataFrame, refreshMode: String = "clear")(
       }
     })
   }
+
+  /** Re-list the files behind every file relation `fact0` reads. Its
+    * file index was fixed when `fact0` was created, so without this a
+    * re-cache would keep serving the files of that moment and miss
+    * what an ingest committed since (a write through this session
+    * refreshes the index itself; another writer's does not). Same
+    * effect as `spark.catalog.refreshByPath` on each input root. */
+  private def refreshSources(): Unit =
+    fact0.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        r.relation match {
+          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            fs.location.refresh()
+          case _ => ()
+        }
+      case _ => ()
+    }
 
   /** Barrier for tests/benchmarks: returns once every refresh batch
     * submitted so far has completed (the refresher is single-threaded

@@ -1,7 +1,10 @@
 package graft
 
 import graft.app.CurateCorpus
-import org.apache.spark.sql.SparkSession
+import graft.app.CurateCorpus.StageCounts
+import graft.operators.{Corpus, Dedup}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +17,157 @@ class CurateCorpusSpec extends AnyFunSuite {
     .getOrCreate()
 
   import spark.implicits._
+
+  /** The curation chain as separate operator calls — each stage joined
+    * back on doc_id, cached and counted — the shape `run` had before
+    * its stage counts became observations: exactDupGroups,
+    * minHashLshPairs / lshDupGroups / jaccardEdgesAuto + CC,
+    * contaminationCheckBloom, hashStratifiedSample, shuffleRank and
+    * chunkDocuments. Returns the stage counts and the chunk rows
+    * (doc_id, chunk_idx, chunk_text, train_rank). */
+  private def reference(docs: DataFrame, probes: DataFrame, dedupMode: String,
+      sampleKeepOf: Map[String, Long], sampleDefaultKeep: Long,
+      sampleMod: Long, chunkTokens: Int, chunkStride: Int): (StageCounts, Seq[Row]) = {
+    val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def stage(df: DataFrame): (DataFrame, Long) = {
+      val c = df.cache(); pinned += c; (c, c.count())
+    }
+    try {
+      val input = docs.count()
+      val (quality, nQuality) = stage(docs.join(Corpus.qualityFilter(docs)
+        .filter(col("keep")).select("doc_id"), "doc_id"))
+      val (exact, nExact) = stage(quality.join(Dedup.exactDupGroups(quality)
+        .filter(col("doc_id") === col("canonical_id")).select("doc_id"), "doc_id"))
+      val route = dedupMode match {
+        case "auto" =>
+          if (Dedup.lshPairBound(exact, pinned += _) > math.max(256L * nExact, 1000000L))
+            "groups" else "pairs"
+        case m => m
+      }
+      val (near, nNear) = stage(route match {
+        case "pairs" => exact.join(Dedup.minHashLshPairs(exact, 0.6, pinned += _)
+          .select(col("doc_b").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
+        case "groups" => exact.join(Dedup.lshDupGroups(exact, 0.6, pinned += _)
+          .filter(col("doc_id") === col("canonical_id")).select("doc_id"), "doc_id")
+        case "jaccard" =>
+          val comp = Dedup.connectedComponents(Dedup.jaccardEdgesAuto(exact,
+            Seq("lang", "source"), n = 3, threshold = 0.6, pin = pinned += _),
+            "doc_a", "doc_b")
+          exact.join(exact.select("doc_id")
+            .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+            .filter(col("component").isNull || col("doc_id") === col("component"))
+            .select("doc_id"), "doc_id")
+      })
+      val contaminated = Corpus.contaminationCheckBloom(near, probes, n = 5,
+        minMatches = 1, pin = pinned += _).filter(col("contaminated")).select("doc_id")
+      val (clean, nClean) = stage(near.join(contaminated, Seq("doc_id"), "left_anti"))
+      val (sampled, nSampled) = stage(clean.join(Corpus.hashStratifiedSample(clean,
+        "lang", sampleKeepOf, sampleDefaultKeep, sampleMod).select("doc_id"), "doc_id"))
+      val order = Corpus.shuffleRank(sampled, seed = 42L)
+        .select(col("doc_id"), col("rank").as("train_rank"))
+      val chunks = Corpus.chunkDocuments(sampled, chunkTokens, chunkStride)
+        .join(order, "doc_id")
+        .select("doc_id", "chunk_idx", "chunk_text", "train_rank").collect().toSeq
+      (StageCounts(input, nQuality, nExact, nNear, nClean, nSampled, chunks.size), chunks)
+    } finally pinned.foreach(_.unpersist())
+  }
+
+  private def familyDocs: DataFrame = {
+    // 1200 near-identical family docs (one LSH bucket per band, so the
+    // candidate pair bound ≈ 4·C(1200,2) trips auto's groups route)
+    // plus 50 docs of a second template, which near dedup collapses too
+    val base = "the curious engineer walked across a long bridge and " +
+      "noted every single data value detail about water flowing near town copy"
+    ((1L to 1200L).map(i => (i, "en", "web", s"$base num$i")) ++
+      (10001L to 10050L).map(i => (i, "de", "web",
+        s"meanwhile a separate report number $i from the archive covers " +
+          s"data value topics with plenty of varied wording on subject ${i * 7}")))
+      .toDF("doc_id", "lang", "source", "text")
+  }
+
+  private case class Fixture(docs: () => DataFrame, probes: DataFrame => DataFrame,
+      keepOf: Map[String, Long], defaultKeep: Long, mod: Long,
+      chunkTokens: Int, chunkStride: Int)
+
+  private val fixtures = Seq(
+    "sf0.001" -> Fixture(() => Tables.documents(spark, "/root/testdata/sf0.001"),
+      _.filter(col("doc_id") < 3), Map("en" -> 10L), 16L, 20L, 32, 24),
+    "1200-member family" -> Fixture(() => familyDocs,
+      _.filter(col("doc_id") === 10007L), Map.empty, 20L, 20L, 64, 48))
+
+  /** `run` on `docs`/`probes` returns the reference's stage counts and
+    * writes its chunk rows, with no cache left behind. */
+  private def assertMatchesReference(docs: DataFrame, probes: DataFrame,
+      f: Fixture, mode: String): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    val out = java.nio.file.Files.createTempDirectory("curate_ref").toString
+    val got = CurateCorpus.run(docs, probes, out, sampleKeepOf = f.keepOf,
+      sampleDefaultKeep = f.defaultKeep, sampleMod = f.mod,
+      chunkTokens = f.chunkTokens, chunkStride = f.chunkStride, dedupMode = mode)
+    assert(spark.sharedState.cacheManager.isEmpty, "run left cached data behind")
+    val (want, wantRows) = reference(docs, probes, mode, f.keepOf, f.defaultKeep,
+      f.mod, f.chunkTokens, f.chunkStride)
+    assert(got == want)
+    val gotRows = spark.read.parquet(out)
+      .select("doc_id", "chunk_idx", "chunk_text", "train_rank").collect().toSeq
+    def key(r: Row) = (r.getLong(0), r.getLong(1))
+    assert(gotRows.sortBy(key) == wantRows.sortBy(key))
+    assert(want.decontaminated < want.nearDedup) // the probe doc is dropped
+  }
+
+  for ((name, f) <- fixtures; mode <- Seq("auto", "pairs", "groups", "jaccard"))
+    test(s"run equals the stage-by-stage reference and leaves no cache: $name, $mode") {
+      val docs = f.docs()
+      assertMatchesReference(docs, f.probes(docs), f, mode)
+    }
+
+  test("run equals the reference past the driver's probe-gram bound (> 10⁶ grams)") {
+    // 1100 generated probes of 1000 distinct tokens each (~1.1×10⁶
+    // distinct 5-grams) beside the planted probe doc: decontamination
+    // leaves the in-row match for the bloom + confirm join, and the
+    // near-dup count observed beneath that join must still be exact
+    val f = fixtures.toMap.apply("1200-member family")
+    val docs = f.docs()
+    val filler = spark.range(1100).select(concat_ws(" ",
+      transform(sequence(lit(1), lit(1000)), i => concat(lit("zq"),
+        col("id").cast("string"), lit("x"), i.cast("string")))).as("text"))
+    val probes = f.probes(docs).select("text").union(filler)
+    assert(probes.select(explode(
+      graft.functions.HashExpressions.tokenNGramHashes(col("text"), 5)))
+      .count() > 1000000L)
+    assertMatchesReference(docs, probes, f, "auto")
+  }
+
+  test("a warm run of the groups route takes at most 25 Spark jobs") {
+    val docs = familyDocs
+    val probes = docs.filter(col("doc_id") === 10007L)
+    val group = "curate-corpus-spec-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some("marker") => marker.countDown()
+          case _ => ()
+        }
+    }
+    def runOnce(): StageCounts = CurateCorpus.run(docs, probes,
+      java.nio.file.Files.createTempDirectory("curate_jobs").toString)
+    val warm = runOnce()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "counted run")
+      val counted = try runOnce() finally spark.sparkContext.clearJobGroup()
+      // the listener bus is FIFO: once the marker job's start arrives,
+      // every job of the counted run has been seen
+      spark.sparkContext.setJobGroup("marker", "listener barrier")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(counted == warm)
+      assert(jobs.get() <= 25, s"${jobs.get()} Spark jobs for one run")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   test("full curation chain on the sf0.001 corpus: monotone stages, chunked output") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")

@@ -95,6 +95,41 @@ class CurationOpsSpec extends AnyFunSuite {
     val exact = Corpus.contaminationCheck(docs, probes, n = 5, minMatches = 1)
     val bloom = Corpus.contaminationCheckBloom(docs, probes, n = 5, minMatches = 1)
     assert(exact.exceptAll(bloom).isEmpty && bloom.exceptAll(exact).isEmpty)
+    assert(exact.filter(col("contaminated")).count() > 0) // non-vacuous
+    // decontaminate (in-row match below its driver bound) keeps exactly
+    // the unflagged docs; its bloom path is pinned in CurateCorpusSpec
+    val unflagged = docs.join(exact.filter(col("contaminated")).select("doc_id"),
+      Seq("doc_id"), "left_anti")
+    val kept = Corpus.decontaminate(docs, probes, n = 5, minMatches = 1)
+    assert(kept.exceptAll(unflagged).isEmpty && unflagged.exceptAll(kept).isEmpty)
+    assert(Corpus.decontaminate(docs, probes.limit(0), n = 5, minMatches = 1)
+      .count() == docs.count()) // empty benchmark: nothing dropped
+  }
+
+  test("lshStarEdges: each doc to its bucket's min id, jaccard-verified, distinct") {
+    // the expected edges computed on the driver from the collected band
+    // rel: per (band_idx, band_hash) bucket, every member other than the
+    // min id pairs with it when their shingle-set jaccard reaches 0.6
+    val base = "a careful reader follows the long winding data value path " +
+      "through the quiet old town and writes down every step"
+    val docs = ((1L to 40L).map(i => (i, s"$base variant$i")) ++
+      (101L to 120L).map(i => (i, s"unrelated note $i about data value " +
+        s"with its own wording number ${i * 13} and more"))).toDF("doc_id", "text")
+    val rel = Dedup.minHashBandRel(docs)
+      .select("doc_id", "hs", "band_idx", "band_hash")
+      .as[(Long, Array[Long], Int, Long)].collect()
+    val hs = rel.map(r => r._1 -> r._2).toMap
+    def jac(a: Array[Long], b: Array[Long]) =
+      a.intersect(b).length.toDouble / (a ++ b).distinct.length
+    val want: Set[(Long, Long)] = rel.groupBy(r => (r._3, r._4)).values
+      .flatMap { members =>
+        val rep = members.map(_._1).min
+        members.map(_._1).filter(_ != rep).map(d => (d, rep))
+      }.toSet
+      .filter(e => jac(hs(e._1), hs(e._2)) >= 0.6)
+    val got = Dedup.lshStarEdges(docs, 0.6).as[(Long, Long)].collect()
+    assert(got.length == got.distinct.length)
+    assert(got.toSet == want && want.size >= 30)
   }
 
   test("contaminationCheckBloom: zero-candidate docs survive with n_matched 0") {

@@ -80,6 +80,46 @@ class UsageApiSpec extends AnyFunSuite {
     assert(!(api.usageJson(req) eq b1)) // bytes re-rendered too
   }
 
+  test("invalidate serves files synced after the api was built (clear and swr)") {
+    // the ingest loop: FileLedger.sync lands a new file's rows as a new
+    // file_id partition of the fact, then invalidate() — with no
+    // catalog refresh by the caller, the new hour must be served. The
+    // partition is committed by a rename into the fact root, as an
+    // ingest process outside this session does (an in-session write
+    // would refresh this session's cached plans by itself).
+    import java.nio.file.{Files, Paths}
+    val newHour = jan1 + 6 * D + 2 * H
+    for (mode <- Seq("clear", "swr")) {
+      val root = Files.createTempDirectory(s"usage_sync_$mode").toString
+      val in = s"$root/in"; Files.createDirectories(Paths.get(in))
+      val factDir = s"$root/fact"; val ledgerDir = s"$root/ledger"
+      def land(name: String, rows: org.apache.spark.sql.DataFrame): Unit =
+        Files.write(Paths.get(in, name),
+          rows.toJSON.collect().mkString("\n").getBytes("UTF-8"))
+      def sync(into: String) = graft.ingest.FileLedger.sync(spark, in, "*.json",
+        into, ledgerDir, p => spark.read.schema(fact.schema).json(p))
+      land("a.json", fact)
+      sync(factDir)
+      val api = new UsageApi(spark.read.parquet(factDir), refreshMode = mode)
+      api.warm()
+      val req = UsageRequest("c1", Seq("alice"), Nil, "minutesTotal",
+        "HOURS", "UTC", jan1, jan1 + 7 * D)
+      def at(r: graft.serve.UsageResponse, t: Long) =
+        r.users.head.data(r.times.indexOf(t))
+      assert(at(api.usage(req), newHour) == 0.0)
+      land("b.json", fact.limit(1).withColumn("time", lit(newHour))
+        .withColumn("elapsedMinutes", lit(42.0)))
+      val d = sync(s"$root/staged")
+      assert(d.added.size == 1)
+      val part = s"file_id=${graft.ingest.FileLedger.fileId(d.added.head)}"
+      Files.move(Paths.get(root, "staged", part), Paths.get(factDir, part))
+      api.invalidate()
+      if (mode == "swr") api.awaitRefresh()
+      assert(at(api.usage(req), newHour) == 42.0, mode)
+      assert(api.warm() == 6L, mode)
+    }
+  }
+
   test("swr mode: invalidate serves stale then swaps refreshed entry (reload semantics)") {
     val api = new UsageApi(fact, refreshMode = "swr")
     val req = UsageRequest("c1", Seq("alice"), Nil, "minutesTotal",
