@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main: runs every registered query against
+/** Breadth and oracle run: runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with per-query seconds.
+  * Timing claims belong to graftbench, not to this main.
   *
   * A full untimed warm-up pass at sf0.001 runs first so the timed
   * numbers measure the plans, not JVM/codegen/parquet-footer warm-up
@@ -13,16 +12,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed once, so the master URL, the JSON line and the mirror's
-    // file name all carry the same integer ("*" = every core)
-    val cpus = (sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim match {
-      case "*" => Runtime.getRuntime.availableProcessors
-      case n => n.toInt
-    }).toString
+    // one integer for the master URL, the JSON line and the mirror's
+    // file name; 32 when unset (the reference run's width)
+    val cpus = GraftSession.cores(32)
     // Shuffle-partition override for scale-proof runs: 32 partitions is
     // right for sf<=0.1 but undersizes sorts at sf10 (~GB partitions
     // spill serially); the driver contract (unset) keeps cpus.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
     // NOTE (r17, measured-and-rejected): AQE's byte-based partition
     // coalescing serializes some CPU-dense small-byte stages (q80's
     // candidate join ran on 8 post-AQE tasks carrying 12 s of CPU), and
@@ -32,12 +28,8 @@ object Bench {
     // overhead on the many-small-shuffle queries (q95 +1.1 s, q25 +0.5 s)
     // outweighs the q72/q80 wins. Operators that need width get it
     // explicitly (REPARTITION_BY_NUM is AQE-exempt) instead.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder("graft-bench", cpus)
       .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -88,22 +80,17 @@ object Bench {
     // path sees the unchanged contract shape.
     val failedField =
       if (failed.isEmpty) "" else s""","failed":[${failed.mkString(",")}]"""
+    // The full-name line goes only to the bench_out mirrors below: a
+    // log that keeps a ~2000-char TAIL of stdout would cut it (at 100
+    // queries that line is ~3.3 KB, head-truncated and unparseable).
+    // Stdout carries ONE compact line instead — short query ids (the
+    // "qNN" prefix, unique by construction) at 2-decimal precision,
+    // ~1.25 KB for 100 queries — a projection of the same run, never a different
+    // measurement. If a short id ever collided the compact line would
+    // silently drop a query, so fall back to full names in that
+    // (never-expected) case.
     val json =
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","cpus":$cpus,"queries":$qs$failedField,"sf":"$sfDir"}"""
-    println(json)
-    // The driver captures only a ~2000-char TAIL of stdout, and at 100
-    // queries the full-name line above is ~3.3 KB — head-truncated and
-    // unparseable every round since ~r13 (BENCH_r13..r17 all have
-    // parsed:null; the 0.1 ms-precision trick that kept the 79-query
-    // line under the window stopped sufficing at 100). So a SECOND,
-    // compact line is printed LAST — short query ids (the "qNN" prefix,
-    // unique by construction) at 2-decimal precision, ~1.25 KB for 100
-    // queries — and lands complete inside the tail window. The full
-    // per-query names and 0.1 ms values stay in the first line and in
-    // the bench_out mirror below; the compact line is a projection of
-    // the same run, never a different measurement. If a short id ever
-    // collided the compact line would silently drop a query, so fall
-    // back to full names in that (never-expected) case.
     val shortIds = results.map { case (k, _, _) => k.takeWhile(_ != '_') }
     val useShort = shortIds.distinct.length == results.length
     def shortOf(k: String) = if (useShort) k.takeWhile(_ != '_') else k
@@ -126,8 +113,8 @@ object Bench {
       case Some(p) => Seq(p)
       case None if only.nonEmpty => Seq("/tmp/bench_subset.json")
       case None =>
-        val suffixed = s"/root/repo/bench_out_c$cpus.json"
-        if (cpus == "32") Seq("/root/repo/bench_out.json", suffixed)
+        val suffixed = s"bench_out_c$cpus.json"
+        if (cpus == 32) Seq("bench_out.json", suffixed)
         else Seq(suffixed)
     }
     outPaths.foreach { outPath =>

@@ -9,6 +9,25 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Cores from a `SPARK_GRAFT_CPUS` value: unset or `*` is every core,
+    * a positive integer is taken as given, anything else is an error
+    * (a bad value must not reach a master URL or a file name). `unset`
+    * is the count when the variable is absent. */
+  def coresOf(value: Option[String], unset: => Int): Int =
+    value.map(_.trim) match {
+      case None => unset
+      case Some("*") => Runtime.getRuntime.availableProcessors
+      case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer or *, got '$v'"))
+    }
+
+  /** The session's cores: `SPARK_GRAFT_CPUS`, every core when unset. */
+  def cores: Int = cores(Runtime.getRuntime.availableProcessors)
+
+  /** [[cores]] with another count for the unset case. */
+  def cores(unset: => Int): Int = coresOf(sys.env.get("SPARK_GRAFT_CPUS"), unset)
+
   def builder(appName: String = "graft",
       cores: Int = Runtime.getRuntime.availableProcessors): SparkSession.Builder =
     SparkSession.builder()

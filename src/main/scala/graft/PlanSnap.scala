@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query formatted-plan snapshots for the optimization rounds:
   * writes `<outDir>/<query>_<tag>.txt` for each selected query — the
@@ -18,11 +17,9 @@ object PlanSnap {
     val prefixes = if (args.length > 3)
       args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     else Seq.empty
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    // fixed width, so snapshots diff the same on any host
+    val spark = GraftSession.builder("graft-plansnap", 4)
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))

@@ -37,12 +37,10 @@ object ServeFuzz {
     val nCases = if (args.length > 1) args(1).toInt else 200
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 3) args(3) else "/tmp/fuzz_out"
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    implicit val spark: SparkSession =
+      GraftSession.builder("graft-servefuzz", GraftSession.cores)
+        .config("spark.sql.shuffle.partitions", "16")
+        .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

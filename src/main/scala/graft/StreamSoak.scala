@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * the reference's 5-day boundary (T5,
   * `hadoop/.../JobStatsProcessing.java:51` semantics).
   *
-  * Stages (one JSON line each, like [[StressBench]]):
+  * Stages (one JSON line each):
   *  - `assembly_soak`: [[graft.streaming.StreamingAssembly]] over
   *    synthesized log-line files. Verifies state rows track OPEN jobs
   *    (completed jobs leave state immediately), drain to ~0 when the
@@ -32,13 +32,9 @@ object StreamSoak {
     val nJobs = if (args.nonEmpty) args(0).toLong else 200000L
     val nDocs = if (args.length > 1) args(1).toLong else 100000L
     val only = if (args.length > 2) args(2) else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cores
+    implicit val spark: SparkSession =
+      GraftSession.builder("graft-streamsoak", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -557,7 +553,7 @@ object StreamSoak {
       val tIdx = System.nanoTime()
       graft.operators.Multimodal.writeFramePostingsBucketed(
         graft.operators.Multimodal.mediaFramePHashes(corpus, stride = 1),
-        "soak_media_postings", buckets = cpus.toInt,
+        "soak_media_postings", buckets = cpus,
         path = Some(s"$idxDir/soak_media_postings"))
       val idxSec = (System.nanoTime() - tIdx) / 1e9
       val postings = spark.table("soak_media_postings")
@@ -660,7 +656,7 @@ object StreamSoak {
       val cellDir = Files.createTempDirectory("soak_embed_cell").toString
       val tIdx = System.nanoTime()
       Dedup.writeEmbedCellRelBucketed(corpus, "label", cents,
-        "soak_embed_cells", cpus.toInt, Some(s"$cellDir/soak_embed_cells"))
+        "soak_embed_cells", cpus, Some(s"$cellDir/soak_embed_cells"))
       val cellIdxSec = (System.nanoTime() - tIdx) / 1e9
       emit("embed_soak_index", "corpus_vecs" -> nVec,
         "cells" -> cents.size, "sec" -> f"$cellIdxSec%.2f")
@@ -753,7 +749,7 @@ object StreamSoak {
       val relDir = Files.createTempDirectory("soak_embed_bg").toString
       val tV1 = System.nanoTime()
       Dedup.writeEmbedCellRelBucketedVersioned(corpus1, "label", cents1,
-        "soak_embed_bg", cpus.toInt, Some(s"$relDir/rel"))
+        "soak_embed_bg", cpus, Some(s"$relDir/rel"))
       emit("embed_staleness_v1", "corpus_vecs" -> nVec,
         "sec" -> f"${(System.nanoTime() - tV1) / 1e9}%.2f")
 
@@ -798,7 +794,7 @@ object StreamSoak {
             // new quantizer fit → v2 swap; v1 must stay on disk for us
             val tV2 = System.nanoTime()
             val v2 = Dedup.writeEmbedCellRelBucketedVersioned(corpus2,
-              "label", cents2, "soak_embed_bg", cpus.toInt,
+              "label", cents2, "soak_embed_bg", cpus,
               Some(s"$relDir/rel"))
             require(spark.catalog.tableExists("soak_embed_bg_v1"),
               "v1 must be kept for the in-flight stream")

@@ -146,18 +146,22 @@ object CurateCorpus {
       // on mutually-similar families, divergent only on borderline
       // chains (lshDupGroups scaladoc documents the trade). One
       // signature cache serves the bound and the chosen operator; the
-      // bound's aggregation is its first (single) scan, which also
-      // builds the exact-survivor cache and so completes its count.
+      // bound comes from auto's one bucket-statistics pass — the first
+      // (single) scan of the signatures, which also builds the exact-
+      // survivor cache and so completes its count — and the pairs
+      // route's own carry/tiled pick reads the same statistics.
       lazy val sigs = Dedup.minHashSigs(exact, pinned += _, eager = false)
-      val dedupChosen = dedupMode match {
-        case "auto" =>
-          val bound = Dedup.pairBoundOf(Dedup.bandRelOf(sigs))
+      val stats =
+        if (dedupMode == "auto") Some(Dedup.bucketStatsOf(Dedup.bandRelOf(sigs)))
+        else None
+      val dedupChosen = stats match {
+        case Some(st) =>
           val budget = math.max(256L * countOf("exact"), 1000000L)
-          val pick = if (bound > budget) "groups" else "pairs"
+          val pick = if (st.pairBound > budget) "groups" else "pairs"
           graft.operators.Parallelism.logDispatch("CurateCorpus.nearDup",
-            s"candidatePairBound=$bound budget=$budget -> $pick")
+            s"candidatePairBound=${st.pairBound} budget=$budget -> $pick")
           pick
-        case m => m
+        case None => dedupMode
       }
       // the ids to drop: every non-canonical member of a near-dup
       // family — usually small next to the corpus, so the survivor
@@ -165,7 +169,7 @@ object CurateCorpus {
       val dropIds = dedupChosen match {
         case "pairs" =>
           Dedup.lshPairsFrom(Dedup.bandRelOf(sigs), 0.6, pinned += _,
-            "auto", maxOutputPairs = -1L)
+            "auto", maxOutputPairs = -1L, stats)
             .select(col("doc_b").as("doc_id")).distinct()
         case route =>
           // groups: star edges over the signature cache (materialized
@@ -180,7 +184,7 @@ object CurateCorpus {
             if (route == "jaccard") Dedup.jaccardEdgesAuto(exact,
               Seq("lang", "source"), n = 3, threshold = 0.6, pin = pinned += _)
             else {
-              if (dedupMode != "auto") sigs.count()
+              if (stats.isEmpty) sigs.count()
               Dedup.lshStarEdgesFrom(sigs, 0.6)
             }
           Dedup.connectedComponents(edges, "doc_a", "doc_b")

@@ -205,16 +205,8 @@ object ProcessLogs {
       clusters = args(2).split(',').toSeq,
       numDays = if (args.length > 3) args(3).toInt else 100,
       numDaysForced = if (args.length > 4) args(4).toInt else 5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-process-logs")
-      // spark-submit injects spark.master; default to local otherwise
-      .config("spark.master",
-        sys.props.getOrElse("spark.master", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("graft-process-logs",
+      graft.GraftSession.cores).getOrCreate()
     run(spark, cfg)
     spark.stop()
   }

@@ -316,18 +316,16 @@ object Corpus {
       fastGrams: Boolean = false): DataFrame = {
     def grams(c: Column) = gramHashesOf(c, n, fastGrams)
     val probeG = probeGramTable(probes, grams)
-    // Empty benchmark ⇒ nothing can be contaminated. Checked explicitly
-    // because DataFrameStatFunctions.bloomFilter NPEs on zero rows
-    // (null internal buffer), and the run-the-app-with-no-benchmark
-    // case is the documented skip path in CurateCorpus.
-    if (probeG.limit(1).count() == 0) {
-      return docs.select(col("doc_id"),
-        size(grams(col("text")))
-          .cast("long").as("n_grams"))
+    probeBloom(probeG, fpp) match {
+      case Some(bf) =>
+        bloomConfirm(Parallelism.widen(docs), probeG, bf, grams, minMatches, pin)
+      // empty benchmark ⇒ nothing can be contaminated (the documented
+      // no-benchmark skip path in CurateCorpus)
+      case None => docs.select(col("doc_id"),
+          size(grams(col("text"))).cast("long").as("n_grams"))
         .withColumn("n_matched", lit(0L))
         .withColumn("contaminated", col("n_matched") >= minMatches)
     }
-    bloomConfirm(Parallelism.widen(docs), probeG, grams, minMatches, fpp, pin)
   }
 
   /** The documents of `docs` (all columns) that [[contaminationCheckBloom]]
@@ -354,10 +352,13 @@ object Corpus {
     if (raw.isEmpty) docs
     else if (raw.length <= DriverProbeGrams)
       docs.filter(matchedGrams(grams(col("text")), raw.distinct) < minMatches)
-    else docs.join(
-      bloomConfirm(docs, probeGramTable(probes, grams), grams, minMatches,
-        fpp, pin).filter(col("contaminated")).select("doc_id"),
-      Seq("doc_id"), "left_anti")
+    else {
+      val probeG = probeGramTable(probes, grams)
+      docs.join(
+        bloomConfirm(docs, probeG, probeBloom(probeG, fpp).get, grams,
+          minMatches, pin).filter(col("contaminated")).select("doc_id"),
+        Seq("doc_id"), "left_anti")
+    }
   }
 
   /** Most probe grams [[decontaminate]] holds on the driver. */
@@ -372,19 +373,28 @@ object Corpus {
       .cast("long")
   }
 
-  private def probeGramTable(probes: DataFrame,
+  private[graft] def probeGramTable(probes: DataFrame,
       grams: Column => Column): DataFrame =
     probes.select(explode(grams(col("text"))).as("g")).distinct()
 
+  /** The bloom filter over a probe gram table, sized for its distinct
+    * gram count (a filter sized below its item count saturates and
+    * passes nearly every corpus gram to the confirm join); None when
+    * the table is empty, where Spark's `bloomFilter` would NPE. A
+    * driver-side build over the benchmark side, small by definition. */
+  private[graft] def probeBloom(probeG: DataFrame,
+      fpp: Double): Option[org.apache.spark.util.sketch.BloomFilter] = {
+    val n = probeG.count()
+    if (n == 0) None else Some(probeG.stat.bloomFilter("g", n, fpp))
+  }
+
   /** [[contaminationCheckBloom]] over a non-empty probe gram table
-    * `probeG`: a bloom filter over it prefilters the corpus grams, and
-    * an exact join confirms the candidates. */
+    * `probeG` and its [[probeBloom]] filter `bf`: the filter prefilters
+    * the corpus grams, and an exact join confirms the candidates. */
   private def bloomConfirm(docs: DataFrame, probeG: DataFrame,
-      grams: Column => Column, minMatches: Int, fpp: Double,
+      bf: org.apache.spark.util.sketch.BloomFilter,
+      grams: Column => Column, minMatches: Int,
       pin: DataFrame => Unit): DataFrame = {
-    // driver-side build over the benchmark side (small by definition —
-    // the corpus side is never collected)
-    val bf = probeG.stat.bloomFilter("g", 100000L, fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
     val bfBytes = bos.toByteArray

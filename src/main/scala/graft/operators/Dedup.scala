@@ -105,14 +105,27 @@ object Dedup {
       pin: DataFrame => Unit = OperatorCaches.register): Long =
     // lazy: the bound's one aggregation is a single scan of the rel,
     // which populates the signature cache for the caller's next step
-    pairBoundOf(minHashBandRel(docs, pin, eager = false))
+    bucketStatsOf(minHashBandRel(docs, pin, eager = false)).pairBound
 
-  /** [[lshPairBound]] over an existing band rel. */
-  private[graft] def pairBoundOf(bandRel: DataFrame): Long =
-    bandRel.groupBy("band_idx", "band_hash").agg(count(lit(1)).as("n"))
-      .agg(coalesce(sum(col("n") * (col("n") - 1) / 2), lit(0L))
-        .cast("long"))
-      .head.getLong(0)
+  /** The band-bucket statistics a minhash pair generator reads, all
+    * from ONE aggregation per call: `pairBound` = Σ candidate pairs
+    * (the `maxOutputPairs` guard, [[lshPairBound]]), `maxBucketPairs`
+    * = the largest bucket's pair proxy (`auto`'s per-task test) and
+    * `rows` = the hash-build rows (`auto`'s and a forced carry's fit
+    * check). */
+  private[graft] final case class BucketStats(pairBound: Long,
+      maxBucketPairs: Long, rows: Long)
+
+  /** [[BucketStats]] of a band rel (buckets of n docs: Σ n·(n−1)/2,
+    * max n², Σ n). */
+  private[graft] def bucketStatsOf(bandRel: DataFrame): BucketStats = {
+    val st = bandRel.groupBy("band_idx", "band_hash")
+      .agg(count(lit(1)).as("n"))
+      .agg(coalesce(sum(col("n") * (col("n") - 1) / 2), lit(0L)).cast("long"),
+        coalesce(max(col("n") * col("n")), lit(0L)),
+        coalesce(sum(col("n")), lit(0L))).head
+    BucketStats(st.getLong(0), st.getLong(1), st.getLong(2))
+  }
 
   /** Strategy variant. `"carry"` — arrays carried through the band
     * join with IN-JOIN verification, re-proven three times as the
@@ -158,13 +171,17 @@ object Dedup {
       strategy, maxOutputPairs)
 
   /** [[minHashLshPairs]] over an existing band rel (shared with a
-    * caller that already scanned it, e.g. for [[pairBoundOf]]). */
+    * caller that already scanned it), with its [[BucketStats]] when
+    * that caller already computed them. */
   private[graft] def lshPairsFrom(bandRel: DataFrame, threshold: Double,
       pin: DataFrame => Unit, strategy: String,
-      maxOutputPairs: Long): DataFrame = {
+      maxOutputPairs: Long, known: Option[BucketStats] = None): DataFrame = {
     val spark = bandRel.sparkSession
+    // at most one stats pass, shared by the guard, auto's pick and a
+    // forced carry's fit check; a forced unguarded tiled call runs none
+    lazy val stats = known.getOrElse(bucketStatsOf(bandRel))
     if (maxOutputPairs > 0L) {
-      val bound = pairBoundOf(bandRel)
+      val bound = stats.pairBound
       if (bound > maxOutputPairs) {
         Parallelism.logDispatch("minHashLshPairs",
           s"candidatePairBound=$bound > maxOutputPairs=$maxOutputPairs " +
@@ -183,11 +200,7 @@ object Dedup {
     }
     val chosen = strategy match {
       case "auto" =>
-        val st = bandRel.groupBy("band_idx", "band_hash")
-          .agg(count(lit(1)).as("n"))
-          .agg(coalesce(max(col("n") * col("n")), lit(0L)),
-            coalesce(sum(col("n")), lit(0L))).head
-        val (mx, total) = (st.getLong(0), st.getLong(1))
+        val (mx, total) = (stats.maxBucketPairs, stats.rows)
         // carry needs BOTH: pair volume under the per-task target AND
         // the unspillable per-partition hash build to fit the
         // execution pool (SigRowBytes ≈ the ~3.8 KB shingle array)
@@ -217,10 +230,10 @@ object Dedup {
     // "carry" skipped auto's fit check, so re-run it here: the
     // unspillable hash build is dropped (sort-merge spills and
     // survives) when it provably cannot fit — forcing the join SHAPE
-    // must not force the OOM. The count is a narrow scan over the
-    // cached signature rel — trivial.
+    // must not force the OOM. The build rows come from the call's one
+    // stats pass over the cached signature rel.
     val carryFits = strategy != "carry" || {
-      val total = bandRel.count()
+      val total = stats.rows
       val fits = Parallelism.hashBuildFits(total, SigRowBytes, spark)
       if (!fits) Parallelism.logDispatch("minHashLshPairs",
         s"forced carry: buildRows=$total won't fit — " +
@@ -335,20 +348,27 @@ object Dedup {
     // and the b-side union), so there the rel is materialized eagerly
     val newBands = minHashBandRel(newDocs, pin,
       eager = strategy == "tiled" && maxOutputPairs <= 0L)
-    if (maxOutputPairs > 0L) {
-      // same guard as minHashLshPairs, bipartite form: candidates per
-      // bucket are na·nbCorpus (increment × indexed corpus) plus
-      // na·(na−1)/2 (new-new); Σ over buckets bounds the output
+    // [[BucketStats]] in bipartite form, from one union-tagged
+    // aggregation per call: a bucket of na new and nb = na + nc docs
+    // (nc indexed corpus) has na·nc + na·(na−1)/2 candidates, pair
+    // proxy na·nb and nb build rows
+    lazy val stats = {
       val tagged = newBands.select(col("band_idx"), col("band_hash"))
         .withColumn("isNew", lit(1))
         .unionByName(corpusBands.select(col("band_idx"), col("band_hash"))
           .withColumn("isNew", lit(0)))
-      val bound = tagged.groupBy("band_idx", "band_hash")
+      val st = tagged.groupBy("band_idx", "band_hash")
         .agg(count(when(col("isNew") === 1, 1)).as("na"),
-          count(when(col("isNew") === 0, 1)).as("nc"))
-        .agg(coalesce(sum(col("na") * col("nc") +
-          col("na") * (col("na") - 1) / 2), lit(0L)).cast("long"))
-        .head.getLong(0)
+          count(lit(1)).as("nb"))
+        .agg(coalesce(sum(col("na") * (col("nb") - col("na")) +
+            col("na") * (col("na") - 1) / 2), lit(0L)).cast("long"),
+          coalesce(max(col("na") * col("nb")), lit(0L)),
+          coalesce(sum(col("nb")), lit(0L))).head
+      BucketStats(st.getLong(0), st.getLong(1), st.getLong(2))
+    }
+    if (maxOutputPairs > 0L) {
+      // same guard as minHashLshPairs, bipartite form
+      val bound = stats.pairBound
       if (bound > maxOutputPairs) {
         Parallelism.logDispatch("incrementalNearDupPairs",
           s"candidatePairBound=$bound > maxOutputPairs=$maxOutputPairs " +
@@ -372,16 +392,7 @@ object Dedup {
         .withColumn("vs_corpus", lit(true)))
     val chosen = strategy match {
       case "auto" =>
-        val tagged = newBands.select(col("band_idx"), col("band_hash"))
-          .withColumn("isNew", lit(1))
-          .unionByName(corpusBands.select(col("band_idx"), col("band_hash"))
-            .withColumn("isNew", lit(0)))
-        val st = tagged.groupBy("band_idx", "band_hash")
-          .agg(count(when(col("isNew") === 1, 1)).as("na"),
-            count(lit(1)).as("nb"))
-          .agg(coalesce(max(col("na") * col("nb")), lit(0L)),
-            coalesce(sum(col("nb")), lit(0L))).head
-        val (mx, total) = (st.getLong(0), st.getLong(1))
+        val (mx, total) = (stats.maxBucketPairs, stats.rows)
         val fits = Parallelism.hashBuildFits(total, SigRowBytes,
           newDocs.sparkSession)
         val pick = if (mx <= 2e7.toLong && fits) "carry" else "tiled"
@@ -410,7 +421,7 @@ object Dedup {
     // carry on a skewed corpus is exactly the unspillable-build OOM the
     // auto path refuses — drop the hint when the build can't fit.
     val carryFits = strategy != "carry" || {
-      val total = bUnion.count()
+      val total = stats.rows
       val fits = Parallelism.hashBuildFits(total, SigRowBytes,
         newDocs.sparkSession)
       if (!fits) Parallelism.logDispatch("incrementalNearDupPairs",

@@ -444,7 +444,7 @@ object Multimodal {
     // The unguarded path does NOT cache: at gate scale the
     // materialization costs more than the three lazy re-reads of a
     // cheap fixture walk (q92 regressed 1.4× when this cache was
-    // unconditional — r13 verdict item 2, ab_bench-adjudicated r14),
+    // unconditional — r13 verdict item 2, adjudicated by an r14 A/B),
     // and an unguarded caller at real scale should be guard-enabled
     // anyway ([[frameNearDupPairsAuto]]). Lifecycle via `pin`.
     val setsRaw = frames.select(col("doc_id"), col("frame_phash")).distinct()

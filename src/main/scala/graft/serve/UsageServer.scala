@@ -109,35 +109,25 @@ object UsageServer {
     System.setProperty("sun.net.httpserver.nodelay", "true")
 
   /** Build the SparkSession a DEDICATED serving process should run —
-    * the profile the round-10 ServeLatency campaign measured (STRESS
-    * .md), applied as wiring instead of a scaladoc note:
+    * the profile the round-10 serving-latency campaign measured
+    * (STRESS.md), applied as wiring instead of a scaladoc note:
     *
     *  - `spark.sql.codegen.wholeStage=false`: every request embeds
     *    fresh literals, so whole-stage codegen compiles a new class
     *    per request; at interactive row counts the compile latency
     *    (~0.3 s on the P95 tail) outweighs the interpreted path's
     *    per-row cost (measured cold P95 658 → 343 ms at 10⁷ rows).
-    *    `SPARK_GRAFT_SERVE_CODEGEN=1` opts back in (a serving fact
-    *    ≫10⁸ rows flips the trade).
-    *  - shuffle partitions = cores: request aggregations are over the
-    *    cached clustered fact; 200 partitions is pure task-launch
-    *    overhead at interactive scale.
+    *    A serving fact ≫10⁸ rows flips the trade.
+    *  - shuffle partitions = cores ([[graft.GraftSession.builder]]):
+    *    request aggregations are over the cached clustered fact; 200
+    *    partitions is pure task-launch overhead at interactive scale.
     *
     * The fact layout itself (range-clustered cache) lives in
     * [[UsageApi]] and applies regardless of session. */
-  def servingSession(appName: String = "graft-usage-server"): org.apache.spark.sql.SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.wholeStage",
-        sys.env.get("SPARK_GRAFT_SERVE_CODEGEN").contains("1").toString)
+  def servingSession(appName: String = "graft-usage-server"): org.apache.spark.sql.SparkSession =
+    graft.GraftSession.builder(appName, graft.GraftSession.cores)
+      .config("spark.sql.codegen.wholeStage", "false")
       .getOrCreate()
-  }
 
   /** `runMain graft.serve.UsageServer <factParquetDir> [port]` — serve
     * the four routes over a parquet usage fact (the `UsageEtl` output

@@ -152,7 +152,7 @@ object StreamingMediaNearDup {
     *  2. prebuilt (doc_id, fhs) sets ([[corpusFrameSets]]) —
     *     TEST-SCALE ONLY: no cut mechanism, and the explode+shuffle of
     *     the corpus re-runs per batch — measured 34× the shuffle bytes
-    *     of shape 1 at sf10 (MediaScaleProbe), growing with the corpus
+    *     of shape 1 at sf10 (STRESS.md media rounds), growing with the corpus
     *     forever. Content-validated at accept time (see
     *     [[corpusFrameSets]]; `assumeDistinct` skips the scan);
     *  3. raw (doc_id, frame_phash) index rows — TEST/DEMO ONLY: pays a
@@ -192,7 +192,7 @@ object StreamingMediaNearDup {
     // exchange — the cheapest possible per-batch corpus touch, one
     // sequential bucketed columnar scan. Without the hint the planner
     // picks sort-merge and re-sorts the fat corpus rel every
-    // micro-batch (measured, MediaScaleProbe stage d).
+    // micro-batch (measured, STRESS.md media stage d).
     val sSide =
       if (corpusSets.columns.contains("n_full")) sRel.hint("shuffle_hash")
       else sRel

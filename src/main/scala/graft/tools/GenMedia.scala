@@ -4,9 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** Scratch fixture generator (not part of the driver contract): a
   * mixed-media parquet table for pipeline-scale CurateMedia runs —
-  * the [[MediaScaleProbe]] gen stage factored out so a corpus larger
-  * than one probe's appetite (e.g. 2 M docs from the sf100 documents
-  * table) can be built once and reused. One real container per doc
+  * built once and reused (e.g. 2 M docs from the sf100 documents
+  * table). One real container per doc
   * (MJPEG / MP4 / MP3 / ADTS round-robin by doc_id % 4) over the
   * document text's 16-byte chunks, so the near-dup family structure
   * the documents table plants (LSH families) carries into frame-set

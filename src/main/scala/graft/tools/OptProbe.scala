@@ -2,51 +2,32 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
-import graft.functions.HashExpressions
 
-/** Round-17 scratch diagnostic (NOT part of the driver contract): stage
-  * timing for the heavy bench queries, so optimization targets the
-  * measured bottleneck instead of the guessed one (guide §1).
+/** Connected-components diagnostics (not part of the benchmark):
+  * `ccscale` runs the distributed CC loop on a synthetic chain graph
+  * with the event log on, so its runtime shuffles per round can be
+  * counted; `ccplan` prints the executed plan of one fold round.
+  *
+  * Usage: runMain graft.tools.OptProbe <ignored> ccscale [nNodes] [famSize]
+  *        runMain graft.tools.OptProbe <ignored> ccplan
   */
 object OptProbe {
-  def time[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[optprobe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val what = if (args.length > 1) args(1) else "q80"
+    val what = if (args.length > 1) args(1) else "ccplan"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get("/tmp/optprobe-events"))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder("graft-optprobe",
+        graft.GraftSession.cores)
       .config("spark.eventLog.enabled", "true")
       .config("spark.eventLog.dir", "/tmp/optprobe-events")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     what match {
-      case "q80" => q80Stages(spark, dir, noop)
-      case "q33" => q33Stages(spark, dir, noop)
-      case "editscale" =>
-        // args: <ignored> editscale <nDocs>
-        val n = if (args.length > 2) args(2).toLong else 50000L
-        editScale(spark, n, noop)
       case "ccscale" =>
-        // args: <ignored> ccscale <nNodes> [famSize]
         val n = if (args.length > 2) args(2).toLong else 2000000L
         val fam = if (args.length > 3) args(3).toInt else 8
-        ccScale(spark, n, fam, noop)
+        ccScale(spark, n, fam)
       case "ccplan" =>
         ccPlan(spark)
       case other => println(s"unknown probe '$other'")
@@ -54,60 +35,13 @@ object OptProbe {
     spark.stop()
   }
 
-  /** At-scale A/B of the r17 edit-distance DP width fix: synthetic
-    * corpus (duplicate families with small in-place edits, block cols
-    * lang/source), q72's incremental split and parameters. The "old"
-    * leg re-creates the pre-fix shape by running with the fused DP
-    * stage fed by a planner exchange (emulated via the operator BEFORE
-    * the fix is not possible post-fix, so instead this measures the
-    * shipped operator and reports the DP stage's width from the event
-    * log — pair with EventLogRun for the stage view). */
-  def editScale(spark: SparkSession, nDocs: Long,
-      noop: DataFrame => Unit): Unit = {
-    import spark.implicits._
-    // ~1% duplicate families of size 4 (base text + 1-3 char edits),
-    // rest unique; text ~300 chars from a positional hash so blocks
-    // don't collapse
-    val docs = spark.range(nDocs)
-      .withColumn("fam", (col("id") / 4).cast("long"))
-      // block cols derived from the FAMILY so dup members share a block
-      .withColumn("lang", concat(lit("l"), pmod(col("fam"), lit(5))))
-      .withColumn("source", concat(lit("s"), pmod(col("fam") / 5, lit(4))))
-      .withColumn("member", pmod(col("id"), lit(4)))
-      .withColumn("isDup", pmod(col("fam"), lit(100)) === 0)
-      .withColumn("seed",
-        when(col("isDup"), col("fam") * 4).otherwise(col("id")))
-      .withColumn("text",
-        concat(
-          sha2(concat(lit("p"), col("seed").cast("string")), 256),
-          sha2(concat(lit("q"), col("seed").cast("string")), 256),
-          sha2(concat(lit("r"), col("seed").cast("string")), 256),
-          sha2(concat(lit("s"), col("seed").cast("string")), 256),
-          // per-member tail: dup families differ by <= ~8 chars
-          when(col("isDup"),
-            substring(sha2(col("member").cast("string"), 256), 1, 8))
-            .otherwise(sha2(concat(lit("t"),
-              col("id").cast("string")), 256))))
-      .select(col("id").as("doc_id"), col("lang"), col("source"),
-        col("text"))
-    val newDocs = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-    val corpus = docs.filter(pmod(col("doc_id"), lit(7)) =!= 0)
-    val out = graft.operators.Dedup.incrementalEditDistancePairs(
-      newDocs, corpus, Seq("lang", "source"), maxDist = 90,
-      prefilterGram = 4)
-    time(s"editscale n=$nDocs incrementalEditDistancePairs")(noop(out))
-    println(s"[optprobe] pairs: ${out.count()}")
-  }
-
-  /** At-scale A/B fixture for the r18 CC half-shuffle fold: a synthetic
+  /** At-scale fixture for the r18 CC half-shuffle fold: a synthetic
     * graph big enough to force the DISTRIBUTED loop (smallGraphEdges
     * forced to -1 regardless) with chain families so the loop runs
     * several propagation rounds — the regime where the per-round
-    * shuffle count is the cost. Pair with the event log to count
-    * runtime shuffles per round. Args: <ignored> ccscale <nNodes>
-    * [famSize] */
-  def ccScale(spark: SparkSession, nNodes: Long, famSize: Int,
-      noop: DataFrame => Unit): Unit = {
+    * shuffle count is the cost. Read the runtime shuffles per round
+    * from the event log. */
+  def ccScale(spark: SparkSession, nNodes: Long, famSize: Int): Unit = {
     // chains of `famSize` nodes: (i, i+1) within each family — a
     // famSize-length chain needs ~famSize-1 plain propagation rounds
     // from the min end, so famSize 6-8 exercises 5-7 rounds without
@@ -116,14 +50,10 @@ object OptProbe {
       .filter(pmod(col("id"), lit(famSize)) =!= (famSize - 1))
       .select(col("id").as("a"), (col("id") + 1).as("b"))
     // the propagation loop runs EAGERLY inside the call (per-round
-    // checkpoints + convergence probes), so the whole call is the
-    // timed region, not just the final materialization
-    val out = time(s"ccscale n=$nNodes fam=$famSize distributed CC") {
-      val o = graft.operators.Dedup.connectedComponents(
-        edges, "a", "b", smallGraphEdges = -1L)
-      noop(o); o
-    }
-    println(s"[optprobe] labeled nodes: ${out.count()}")
+    // checkpoints + convergence probes)
+    val out = graft.operators.Dedup.connectedComponents(
+      edges, "a", "b", smallGraphEdges = -1L)
+    println(s"[optprobe] ccscale n=$nNodes fam=$famSize labeled nodes: ${out.count()}")
   }
 
   /** One CC fold round in isolation, with the EXECUTED plan printed —
@@ -140,7 +70,7 @@ object OptProbe {
     val labels0 = sym.groupBy(col("a"))
       .agg(min("b").as("mb"))
       .select(col("a").as("id"), least(col("a"), col("mb")).as("component"))
-    def round(labels: org.apache.spark.sql.DataFrame, tag: String): Unit = {
+    def round(labels: DataFrame, tag: String): Unit = {
       val msgs = sym.join(labels, sym("b") === labels("id"))
         .select(sym("a").as("id"), col("component"))
       val upd = msgs.groupBy("id").agg(min("component").as("mc"))
@@ -164,100 +94,5 @@ object OptProbe {
     cached.count()
     round(cached, "cached labels")
     cached.unpersist()
-  }
-
-  /** q33 (IVF ANN) stage timing: index build vs probe join vs window. */
-  def q33Stages(spark: SparkSession, dir: String,
-      noop: DataFrame => Unit): Unit = {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(spark, dir)
-    emb.count()
-    val cents = graft.operators.IvfCentroids.forCorpus(emb)
-    println(s"[optprobe] vecs=${emb.count()} cells=${cents.size}")
-    val idx = time("1 buildIvfIndex (cache+count)")(
-      Similarity.buildIvfIndex(emb, cents, 2))
-    val assigned = idx.filter(col("pr") === 1)
-      .select(col("vec_id").as("neighbor_id"), col("cell"),
-        col("embedding").as("e_b"), col("nrm").as("n_b"))
-    val probes = idx.filter(col("pr") <= 2)
-      .select(col("vec_id").as("query_id"), col("cell"),
-        col("embedding").as("e_a"), col("nrm").as("n_a"))
-    val joined = probes.join(assigned, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-    println(s"[optprobe] candidates: ${time("2 join count")(joined.count())}")
-    val scored = joined.withColumn("cosine",
-      Similarity.dot(col("e_a"), col("e_b")) / (col("n_a") * col("n_b")))
-      .select("query_id", "neighbor_id", "cosine")
-    time("3 score noop")(noop(scored))
-    val out = scored.withColumn("rank", row_number().over(
-      Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rank") <= 3)
-    time("4 window noop")(noop(out))
-    time("5 full repeat noop")(noop(out))
-  }
-
-  /** The prefix (PPJoin) path of ngramJaccardPairs, stage by stage —
-    * mirrors Dedup.ngramJaccardPairs(strategy="prefix") exactly. */
-  def q80Stages(spark: SparkSession, dir: String,
-      noop: DataFrame => Unit): Unit = {
-    val blockCols = Seq("lang", "source")
-    val n = 3
-    val threshold = 0.5
-    val docs = Tables.documents(spark, dir)
-    // warm-up: JIT + parquet footers
-    docs.count()
-
-    val sh = graft.operators.Parallelism.widen(docs).select(
-      (col("doc_id") +: blockCols.map(col)) :+
-        HashExpressions.shingleHashes(col("text"), n).as("sh"): _*)
-    val shC = sh.cache()
-    time("1 sh cache+count")(shC.count())
-
-    val g = shC.select(
-      (col("doc_id") +: blockCols.map(col)) :+
-        size(col("sh")).as("sz") :+ explode(col("sh")).as("g"): _*)
-    println(s"[optprobe] exploded gram rows: ${time("g count")(g.count())}")
-    val dfreq = g.groupBy("g").agg(count(lit(1)).as("df"))
-    println(s"[optprobe] distinct grams: ${time("dfreq count")(dfreq.count())}")
-    val ranked = g.join(dfreq, "g")
-      .groupBy((col("doc_id") +: blockCols.map(col)) :+ col("sz"): _*)
-      .agg(array_sort(collect_list(struct(col("df"), col("g"))))
-        .as("ordered"))
-      .withColumn("pfxn", expr(
-        s"greatest(1, cast(sz - ceil($threshold * sz) + 2 as int))"))
-      .cache()
-    time("2 ranked cache+count")(ranked.count())
-
-    def prefixSide(idAs: String, szAs: String) = ranked.select(
-      (col("doc_id").as(idAs) +: blockCols.map(col)) :+
-        col("sz").as(szAs) :+
-        explode(expr("slice(ordered, 1, pfxn)")).as("pe"): _*)
-      .withColumn("g", col("pe.g")).drop("pe")
-    val pa = prefixSide("doc_a", "sz_a")
-    val pb = prefixSide("doc_b", "sz_b")
-    println(s"[optprobe] docs: ${docs.count()}  prefix rows/side: ${pa.count()}")
-    println(s"[optprobe] raw join output: ${time("raw join count")(
-      pa.join(pb, blockCols :+ "g").count())}")
-    val cands = pa.join(pb, blockCols :+ "g")
-      .filter(col("doc_a") < col("doc_b") &&
-        col("sz_a") * lit(threshold) <= col("sz_b") + lit(1) &&
-        col("sz_b") * lit(threshold) <= col("sz_a") + lit(1))
-      .select((col("doc_a") +: col("doc_b") +: blockCols.map(col)): _*)
-      .distinct()
-    val candsC = cands.cache()
-    println(s"[optprobe] candidates: ${time("3 cands distinct count")(candsC.count())}")
-
-    val out = candsC
-      .join(shC.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(shC.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("jac",
-        HashExpressions.sortedJaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jac") >= threshold)
-      .select((col("doc_a") +: col("doc_b") +: blockCols.map(col)) :+
-        col("jac"): _*)
-    time("4 verify+output noop")(noop(out))
-    shC.unpersist(); ranked.unpersist(); candsC.unpersist()
   }
 }

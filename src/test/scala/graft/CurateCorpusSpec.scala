@@ -136,11 +136,24 @@ class CurateCorpusSpec extends AnyFunSuite {
       graft.functions.HashExpressions.tokenNGramHashes(col("text"), 5)))
       .count() > 1000000L)
     assertMatchesReference(docs, probes, f, "auto")
+    // the bloom filter is sized for the probe set's distinct grams, so
+    // it keeps its false-positive rate; the flagged ids are the exact
+    // gram-join's
+    val grams = (c: org.apache.spark.sql.Column) =>
+      graft.functions.HashExpressions.tokenNGramHashes(c, 5)
+    val bf = Corpus.probeBloom(Corpus.probeGramTable(probes, grams), 0.01)
+    assert(bf.exists(_.expectedFpp() <= 0.02), bf.map(_.expectedFpp()))
+    val flagged = Corpus.contaminationCheckBloom(docs, probes, n = 5, minMatches = 1)
+      .filter(col("contaminated")).select("doc_id").as[Long].collect().toSet
+    val exactIds = docs.select(col("doc_id"), explode(grams(col("text"))).as("g"))
+      .join(Corpus.probeGramTable(probes, grams), "g")
+      .select("doc_id").distinct().as[Long].collect().toSet
+    assert(flagged.nonEmpty && flagged == exactIds)
   }
 
-  test("a warm run of the groups route takes at most 25 Spark jobs") {
-    val docs = familyDocs
-    val probes = docs.filter(col("doc_id") === 10007L)
+  /** Spark jobs of one `run` after a warm-up run, with its stage counts. */
+  private def warmJobs(docs: DataFrame, probes: DataFrame,
+      run: String => StageCounts): (StageCounts, Int) = {
     val group = "curate-corpus-spec-jobs"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val marker = new java.util.concurrent.CountDownLatch(1)
@@ -152,8 +165,8 @@ class CurateCorpusSpec extends AnyFunSuite {
           case _ => ()
         }
     }
-    def runOnce(): StageCounts = CurateCorpus.run(docs, probes,
-      java.nio.file.Files.createTempDirectory("curate_jobs").toString)
+    def runOnce(): StageCounts =
+      run(java.nio.file.Files.createTempDirectory("curate_jobs").toString)
     val warm = runOnce()
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -165,8 +178,27 @@ class CurateCorpusSpec extends AnyFunSuite {
       try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
       assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
       assert(counted == warm)
-      assert(jobs.get() <= 25, s"${jobs.get()} Spark jobs for one run")
+      (counted, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a warm run of the groups route takes at most 25 Spark jobs") {
+    val docs = familyDocs
+    val probes = docs.filter(col("doc_id") === 10007L)
+    val (_, jobs) = warmJobs(docs, probes, CurateCorpus.run(docs, probes, _))
+    assert(jobs <= 25, s"$jobs Spark jobs for one run")
+  }
+
+  test("auto's route bound shares the pairs route's bucket statistics: no more jobs than forced pairs") {
+    val f = fixtures.toMap.apply("sf0.001")
+    val docs = f.docs()
+    val probes = f.probes(docs)
+    def jobsOf(mode: String) = warmJobs(docs, probes,
+      CurateCorpus.run(docs, probes, _, dedupMode = mode))
+    val (autoCounts, autoJobs) = jobsOf("auto")
+    val (pairsCounts, pairsJobs) = jobsOf("pairs")
+    assert(autoCounts == pairsCounts) // sf0.001 is below auto's budget
+    assert(autoJobs <= pairsJobs, s"auto $autoJobs jobs, pairs $pairsJobs")
   }
 
   test("full curation chain on the sf0.001 corpus: monotone stages, chunked output") {

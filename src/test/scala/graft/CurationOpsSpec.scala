@@ -709,9 +709,16 @@ class CurationOpsSpec extends AnyFunSuite {
         maxOutputPairs = 100L)
     }
     assert(e.getMessage.contains("lshDupGroups")) // routing recommendation
+    // the bound is lshPairBound's exact Σ C(n,2) = 3120: refused one
+    // below it, admitted at it
+    intercept[IllegalStateException] {
+      Dedup.minHashLshPairs(familyDocs, 0.6,
+        graft.operators.OperatorCaches.register, "carry",
+        maxOutputPairs = 3119L)
+    }
     val guarded = Dedup.minHashLshPairs(familyDocs, 0.6,
       graft.operators.OperatorCaches.register, "auto",
-      maxOutputPairs = 100000L)
+      maxOutputPairs = 3120L)
     val unguarded = Dedup.minHashLshPairs(familyDocs, 0.6)
     assert(guarded.exceptAll(unguarded).isEmpty &&
       unguarded.exceptAll(guarded).isEmpty)
@@ -743,8 +750,14 @@ class CurationOpsSpec extends AnyFunSuite {
         maxOutputPairs = 100L)
     }
     assert(e.getMessage.contains("maxOutputPairs"))
+    // 4 band buckets of 20 new + 20 indexed docs: 4·(20·20 + C(20,2))
+    // = 2360 candidates, refused one below, admitted at it
+    intercept[IllegalStateException] {
+      Dedup.incrementalNearDupPairs(newDocs, idx, 0.6, strategy = "carry",
+        maxOutputPairs = 2359L)
+    }
     val guarded = Dedup.incrementalNearDupPairs(newDocs, idx, 0.6,
-      maxOutputPairs = 100000L)
+      maxOutputPairs = 2360L)
     val unguarded = Dedup.incrementalNearDupPairs(newDocs, idx, 0.6)
     assert(guarded.exceptAll(unguarded).isEmpty &&
       unguarded.exceptAll(guarded).isEmpty)

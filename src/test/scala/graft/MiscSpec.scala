@@ -5,6 +5,7 @@ import graft.ingest.FileLedger.{Diff, FileState}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class MiscSpec extends AnyFunSuite {
 
@@ -51,6 +52,31 @@ class MiscSpec extends AnyFunSuite {
     val s = graft.GraftSession.create("misc-test")
     assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(s.sql("SELECT poly_hash('ab')").head().getLong(0) == 97L * 31 + 98)
+  }
+
+  test("GraftSession.coresOf: unset and * are every core, a positive integer as given, else an error") {
+    val all = Runtime.getRuntime.availableProcessors
+    assert(GraftSession.coresOf(None, all) == all)
+    assert(GraftSession.coresOf(None, 32) == 32)
+    assert(GraftSession.coresOf(Some("*"), 32) == all)
+    assert(GraftSession.coresOf(Some("8"), 32) == 8)
+    assert(GraftSession.coresOf(Some(" 8 "), 32) == 8)
+    for (bad <- Seq("0", "-1", "x", "", "8x")) {
+      val e = intercept[IllegalArgumentException](GraftSession.coresOf(Some(bad), 32))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), bad)
+    }
+  }
+
+  test("every main-code session is built through GraftSession") {
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val walk = java.nio.file.Files.walk(root)
+    val builders = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "GraftSession.scala")
+      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder("))
+      .toList finally walk.close()
+    assert(builders.isEmpty, s"SparkSession.builder( outside GraftSession: $builders")
   }
 
   test("ledger diff: added / changed-mtime / removed (T2/T3)") {

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Detached probe launcher (plain java: keeps sbt free for spec work
+# Detached main launcher (plain java: keeps sbt free for spec work
 # while a long measurement run owns the cores). Mirrors build.sbt's
 # fork javaOptions. Usage: run_tool.sh <mainClass> [args...]
 cd /root/repo
