@@ -1,6 +1,6 @@
 package graft.app
 
-import graft.operators.{Corpus, Dedup}
+import graft.operators.{Corpus, Dedup, Parallelism}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,8 +73,6 @@ object CurateCorpus {
       fastGrams: Boolean = false,
       dedupMode: String = "auto")(
       implicit spark: SparkSession): StageCounts = {
-    require(Set("pairs", "groups", "auto", "jaccard")(dedupMode),
-      s"dedupMode must be pairs|groups|auto|jaccard, got $dedupMode")
     // Few Spark jobs per run (each costs driver planning and scheduling
     // latency that dominates at corpus sizes a driver can plan for):
     //  - every stage count is an Observation on a node that an action
@@ -132,16 +130,9 @@ object CurateCorpus {
       // groups labeling ([[Dedup.lshDupGroups]], edge volume ≤
       // nBands·N) beyond it, so a skewed 100 TB corpus cannot
       // accidentally materialize a quadratic pair set on the way to a
-      // survivor list. Budget: 256 candidate pairs/doc — a corpus
-      // whose candidate mass is O(1) per doc is linear however big it
-      // grows (the campaign's uniform corpus measures ~186/doc at
-      // BOTH 50 k and 500 k docs: its boilerplate families replicate
-      // per copy, so Σfamily² grows ∝ N), while quadratic families
-      // push the per-doc rate unbounded (gen_skew: 94/doc at 50 k,
-      // 938/doc at 500 k, ~10× per decade). 32/doc was measured too
-      // tight — it flipped the linear uniform corpus too. Floor 10⁶
-      // so tiny runs never flap. Both modes keep each family's
-      // min-id member: pairs drops every verified doc_b (higher id),
+      // survivor list (budget: [[Parallelism.routeBudget]]). Both
+      // modes keep each family's min-id member: pairs drops every
+      // verified doc_b (higher id),
       // groups keeps doc_id == canonical (component min) — identical
       // on mutually-similar families, divergent only on borderline
       // chains (lshDupGroups scaladoc documents the trade). One
@@ -151,17 +142,13 @@ object CurateCorpus {
       // survivor cache and so completes its count — and the pairs
       // route's own carry/tiled pick reads the same statistics.
       lazy val sigs = Dedup.minHashSigs(exact, pinned += _, eager = false)
-      val stats =
-        if (dedupMode == "auto") Some(Dedup.bucketStatsOf(Dedup.bandRelOf(sigs)))
-        else None
-      val dedupChosen = stats match {
-        case Some(st) =>
-          val budget = math.max(256L * countOf("exact"), 1000000L)
-          val pick = if (st.pairBound > budget) "groups" else "pairs"
-          graft.operators.Parallelism.logDispatch("CurateCorpus.nearDup",
-            s"candidatePairBound=${st.pairBound} budget=$budget -> $pick")
-          pick
-        case None => dedupMode
+      lazy val stats = Dedup.bucketStatsOf(Dedup.bandRelOf(sigs))
+      val dedupChosen = Parallelism.pickStrategy("CurateCorpus.nearDup",
+          dedupMode, Seq("pairs", "groups", "jaccard")) {
+        val bound = stats.pairBound // its job completes the exact count
+        val budget = Parallelism.routeBudget(countOf("exact"))
+        (if (bound > budget) "groups" else "pairs",
+          s"candidatePairBound=$bound budget=$budget")
       }
       // the ids to drop: every non-canonical member of a near-dup
       // family — usually small next to the corpus, so the survivor
@@ -169,7 +156,7 @@ object CurateCorpus {
       val dropIds = dedupChosen match {
         case "pairs" =>
           Dedup.lshPairsFrom(Dedup.bandRelOf(sigs), 0.6, pinned += _,
-            "auto", maxOutputPairs = -1L, stats)
+            "auto", maxOutputPairs = -1L, Some(stats))
             .select(col("doc_b").as("doc_id")).distinct()
         case route =>
           // groups: star edges over the signature cache (materialized
@@ -184,18 +171,16 @@ object CurateCorpus {
             if (route == "jaccard") Dedup.jaccardEdgesAuto(exact,
               Seq("lang", "source"), n = 3, threshold = 0.6, pin = pinned += _)
             else {
-              if (stats.isEmpty) sigs.count()
+              if (dedupMode != "auto") sigs.count()
               Dedup.lshStarEdgesFrom(sigs, 0.6)
             }
           Dedup.connectedComponents(edges, "doc_a", "doc_b")
             .filter(col("id") =!= col("component"))
             .select(col("id").as("doc_id"))
       }
-      // spread over a fixed width for the gram hashing below: widen's
-      // partition probe (`.rdd`) would run the drop-id stages once here
-      // and again in the job that consumes them
-      val near = observed(exact.join(dropIds, Seq("doc_id"), "left_anti")
-        .repartition(graft.operators.Parallelism.wideN(spark)), "near")
+      // spread for the gram hashing below
+      val near = observed(Parallelism.widen(
+        exact.join(dropIds, Seq("doc_id"), "left_anti")), "near")
 
       // 4. decontamination vs the probe set: one bounded collect of the
       // probe grams, then an in-row match per document
@@ -263,23 +248,17 @@ object CurateCorpus {
     // ~10⁵ probe grams (STRESS.md round 10). v2 output is NOT
     // byte-identical to v1: previously phantom-dropped docs survive,
     // so consumers expecting reproducible v1 corpora must pin
-    // SPARK_GRAFT_CURATE_V=1 (or re-baseline). SPARK_GRAFT_FAST_GRAMS
-    // (=0 oracle polyhash / =1 xxhash64) force-overrides either
-    // version for parity debugging — the gate shape stays the
-    // DuckDB-mirrorable polyhash path.
+    // SPARK_GRAFT_CURATE_V=1 (or re-baseline); v1 is also the
+    // DuckDB-mirrorable polyhash gate shape.
     val ver = sys.env.getOrElse("SPARK_GRAFT_CURATE_V", "2")
     require(ver == "1" || ver == "2", s"SPARK_GRAFT_CURATE_V must be 1 or 2, got $ver")
-    val fast = sys.env.get("SPARK_GRAFT_FAST_GRAMS") match {
-      case Some(v) => v != "0"
-      case None    => ver != "1"
-    }
     // SPARK_GRAFT_DEDUP=pairs|groups|auto|jaccard (default auto):
     // force the near-dup survivor strategy; auto routes on the
     // measured candidate-pair bound (see run()'s stage-3 comment);
     // jaccard switches to the exact blocked n-gram edge family,
     // itself auto-routed to banded star edges past its block bound
     val dedup = sys.env.getOrElse("SPARK_GRAFT_DEDUP", "auto")
-    val counts = run(docs, probes, args(1), fastGrams = fast,
+    val counts = run(docs, probes, args(1), fastGrams = ver == "2",
       dedupMode = dedup)
     println(s"[curate] $counts")
     spark.stop()

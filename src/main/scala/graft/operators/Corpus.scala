@@ -315,7 +315,7 @@ object Corpus {
       pin: DataFrame => Unit = OperatorCaches.register,
       fastGrams: Boolean = false): DataFrame = {
     def grams(c: Column) = gramHashesOf(c, n, fastGrams)
-    val probeG = probeGramTable(probes, grams)
+    val probeG = probeGramTable(probes, grams, pin)
     probeBloom(probeG, fpp) match {
       case Some(bf) =>
         bloomConfirm(Parallelism.widen(docs), probeG, bf, grams, minMatches, pin)
@@ -338,8 +338,7 @@ object Corpus {
     * 10⁶ probe grams (repeats included — 8 MB of longs, below Spark's
     * default broadcast and result-size limits), `docs` anti-joins the
     * flagged ids of [[contaminationCheckBloom]]'s bloom + confirm
-    * path, run on `docs` as given: `Parallelism.widen` would call
-    * `.rdd` on it, which leaves an Observation on `docs` reading 0. */
+    * path, run on `docs` as given. */
   def decontaminate(docs: DataFrame, probes: DataFrame, n: Int,
       minMatches: Int, fpp: Double = 0.01,
       pin: DataFrame => Unit = OperatorCaches.register,
@@ -353,7 +352,7 @@ object Corpus {
     else if (raw.length <= DriverProbeGrams)
       docs.filter(matchedGrams(grams(col("text")), raw.distinct) < minMatches)
     else {
-      val probeG = probeGramTable(probes, grams)
+      val probeG = probeGramTable(probes, grams, pin)
       docs.join(
         bloomConfirm(docs, probeG, probeBloom(probeG, fpp).get, grams,
           minMatches, pin).filter(col("contaminated")).select("doc_id"),
@@ -373,9 +372,16 @@ object Corpus {
       .cast("long")
   }
 
+  /** The distinct probe grams, cached under `pin`: the bloom path reads
+    * them three times (the filter's size count, the filter build and
+    * the confirm join), and the first of them materializes the cache. */
   private[graft] def probeGramTable(probes: DataFrame,
-      grams: Column => Column): DataFrame =
-    probes.select(explode(grams(col("text"))).as("g")).distinct()
+      grams: Column => Column,
+      pin: DataFrame => Unit = OperatorCaches.register): DataFrame = {
+    val g = probes.select(explode(grams(col("text"))).as("g")).distinct().cache()
+    pin(g)
+    g
+  }
 
   /** The bloom filter over a probe gram table, sized for its distinct
     * gram count (a filter sized below its item count saturates and

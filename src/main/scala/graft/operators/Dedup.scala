@@ -127,29 +127,6 @@ object Dedup {
     BucketStats(st.getLong(0), st.getLong(1), st.getLong(2))
   }
 
-  /** Strategy variant. `"carry"` — arrays carried through the band
-    * join with IN-JOIN verification, re-proven three times as the
-    * right join SHAPE (STRESS.md r7 negative result, the r8 sf10
-    * post-mortem of the attach shape whose per-candidate bytes filled
-    * the disk, and an r9 re-test of a dispatch-guarded slim variant:
-    * 3.3 s vs carry's 2.7 s at sf0.1 — attach loses on stage count at
-    * small scale and on bytes at large scale). `"tiled"` — the same
-    * verify arithmetic inside [[TiledKernels.blockJaccardPairs]] grid
-    * tiles. `"auto"` picks carry while NO band bucket exceeds the
-    * per-task pair target (the gate/uniform regime: a plain hash join,
-    * no salt machinery) and tiled above it.
-    *
-    * Why tiled, not salted-carry, above the bound (sf10skew
-    * post-mortem, round 9): a salted shuffle-hash join splits only the
-    * PROBE stream — every salted task still BUILDS the whole bucket's
-    * b side as an unspillable hash relation, so task memory grows with
-    * the largest bucket. The gen_skew 37.5k-member family made that
-    * ~140 MB × 32 concurrent tasks and q21/q71 died on
-    * UNABLE_TO_ACQUIRE_MEMORY; sort-merge would survive but sorts the
-    * multi-KB arrays (243 s / 14 GB spilled, r8). Tile memory is
-    * bounded by construction (~2·√target rows per tile) regardless of
-    * bucket size, and the pair predicate + jaccard fold are
-    * bit-identical. */
   /** `maxOutputPairs` (>0 to enable): refuse to run when the candidate
     * pair bound Σ_bucket n·(n−1)/2 exceeds it. The pair OUTPUT is
     * data-quadratic inside a duplicate family (a b-member family is
@@ -159,7 +136,8 @@ object Dedup {
     * materialize it by accident: the guard throws with the routing
     * recommendation ([[lshDupGroups]], O(nBands·N) edges) instead of
     * launching the join. Left at −1 the operator runs unbounded (the
-    * gate/analysis shape, where the pair list IS the product). */
+    * gate/analysis shape, where the pair list IS the product).
+    * `strategy`: auto|carry|tiled (see [[minHashPairs]]). */
   def minHashLshPairs(docs: DataFrame, threshold: Double,
       pin: DataFrame => Unit, strategy: String,
       maxOutputPairs: Long = -1L): DataFrame =
@@ -175,85 +153,128 @@ object Dedup {
     * that caller already computed them. */
   private[graft] def lshPairsFrom(bandRel: DataFrame, threshold: Double,
       pin: DataFrame => Unit, strategy: String,
-      maxOutputPairs: Long, known: Option[BucketStats] = None): DataFrame = {
-    val spark = bandRel.sparkSession
-    // at most one stats pass, shared by the guard, auto's pick and a
-    // forced carry's fit check; a forced unguarded tiled call runs none
-    lazy val stats = known.getOrElse(bucketStatsOf(bandRel))
-    if (maxOutputPairs > 0L) {
-      val bound = stats.pairBound
-      if (bound > maxOutputPairs) {
-        Parallelism.logDispatch("minHashLshPairs",
-          s"candidatePairBound=$bound > maxOutputPairs=$maxOutputPairs " +
-            "-> REFUSED (quadratic pair output; route to lshDupGroups " +
-            "for survivors/labels)")
-        throw new IllegalStateException(
-          s"minHashLshPairs: candidate pair volume ≈ $bound exceeds " +
-            s"maxOutputPairs=$maxOutputPairs. The pair output grows " +
-            "with Σ duplicate-family² — if you only need canonical " +
-            "labels/survivors, use Dedup.lshDupGroups (linear edge " +
-            "volume); to enumerate pairs anyway, raise or disable the " +
-            "bound.")
-      }
-      Parallelism.logDispatch("minHashLshPairs",
-        s"candidatePairBound=$bound <= maxOutputPairs=$maxOutputPairs -> ok")
+      maxOutputPairs: Long, known: Option[BucketStats] = None): DataFrame =
+    minHashPairs("minHashLshPairs", bandRel,
+      bandRel.select(col("band_idx"), col("band_hash"),
+        col("doc_id").as("doc_b"), col("hs").as("hs_b")),
+      known.getOrElse(bucketStatsOf(bandRel)), threshold, pin, strategy,
+      maxOutputPairs, col("doc_a") < col("doc_b"), Seq("doc_a", "doc_b", "jac"))(
+      TiledKernels.blockJaccardPairs(_, threshold, pin = pin))
+
+  /** The minhash pair body shared by [[minHashLshPairs]] and
+    * [[incrementalNearDupPairs]]: the `maxOutputPairs` guard, the
+    * carry/tiled pick, then the carry band join with its in-join verify
+    * or the `tiled` kernel over the a side's tile rel. `aBands` is the
+    * probe band rel (doc_id, hs, band_idx, band_hash); `b` carries
+    * band_idx, band_hash, doc_b, hs_b and whatever else `outCols`
+    * names; `pairPred` keeps each candidate pair once. `stats` is
+    * evaluated at most once — by the guard, auto's pick or a forced
+    * carry's fit check; a forced unguarded tiled call runs none.
+    *
+    * Strategy variant. `"carry"` — arrays carried through the band
+    * join with IN-JOIN verification, re-proven three times as the
+    * right join SHAPE (STRESS.md r7 negative result, the r8 sf10
+    * post-mortem of the attach shape whose per-candidate bytes filled
+    * the disk, and an r9 re-test of a dispatch-guarded slim variant:
+    * 3.3 s vs carry's 2.7 s at sf0.1 — attach loses on stage count at
+    * small scale and on bytes at large scale). `"tiled"` — the same
+    * verify arithmetic inside grid tiles
+    * ([[TiledKernels.blockJaccardPairs]] /
+    * [[TiledKernels.bipartiteJaccardPairs]]). `"auto"` picks carry
+    * while NO band bucket exceeds the per-task pair target and the
+    * hash build fits (the gate/uniform regime: a plain hash join, no
+    * salt machinery) and tiled otherwise.
+    *
+    * Why tiled, not salted-carry, above the bound (sf10skew
+    * post-mortem, round 9): a salted shuffle-hash join splits only the
+    * PROBE stream — every salted task still BUILDS the whole bucket's
+    * b side as an unspillable hash relation, so task memory grows with
+    * the largest bucket. The gen_skew 37.5k-member family made that
+    * ~140 MB × 32 concurrent tasks and q21/q71 died on
+    * UNABLE_TO_ACQUIRE_MEMORY; sort-merge would survive but sorts the
+    * multi-KB arrays (243 s / 14 GB spilled, r8). Tile memory is
+    * bounded by construction (~2·√target rows per tile) regardless of
+    * bucket size, and the pair predicate + jaccard fold are
+    * bit-identical. */
+  private def minHashPairs(op: String, aBands: DataFrame, b: DataFrame,
+      stats: => BucketStats, threshold: Double, pin: DataFrame => Unit,
+      strategy: String, maxOutputPairs: Long,
+      pairPred: org.apache.spark.sql.Column, outCols: Seq[String])(
+      tiled: DataFrame => DataFrame): DataFrame = {
+    lazy val st = stats
+    guardPairs(op, "maxOutputPairs", maxOutputPairs, st.pairBound)
+    // carry needs BOTH: pair volume under the per-task target AND the
+    // unspillable per-partition hash build to fit the execution pool
+    // (SigRowBytes ≈ the ~3.8 KB shingle array)
+    def fits = Parallelism.hashBuildFits(st.rows, SigRowBytes,
+      aBands.sparkSession)
+    val chosen = Parallelism.pickStrategy(op, strategy, Seq("carry", "tiled")) {
+      val f = fits
+      (if (st.maxBucketPairs <= 2e7.toLong && f) "carry" else "tiled",
+        s"maxBucketPairs=${st.maxBucketPairs} buildRows=${st.rows} buildFits=$f")
     }
-    val chosen = strategy match {
-      case "auto" =>
-        val (mx, total) = (stats.maxBucketPairs, stats.rows)
-        // carry needs BOTH: pair volume under the per-task target AND
-        // the unspillable per-partition hash build to fit the
-        // execution pool (SigRowBytes ≈ the ~3.8 KB shingle array)
-        val fits = Parallelism.hashBuildFits(total, SigRowBytes, spark)
-        val pick = if (mx <= 2e7.toLong && fits) "carry" else "tiled"
-        Parallelism.logDispatch("minHashLshPairs",
-          s"maxBucketPairs=$mx buildRows=$total buildFits=$fits -> $pick")
-        pick
-      case s @ ("carry" | "tiled") => s
-      case other => throw new IllegalArgumentException(
-        s"unknown minHashLshPairs strategy '$other' (auto|carry|tiled)")
-    }
-    if (chosen == "tiled") {
+    if (chosen == "tiled")
       // concat_ws, not to_json: band_idx/band_hash are never-null
       // numerics, so the cheap string key is just as unique and the
       // tile rel's groupBy/exchange hash it ~3× per row
-      val rel = bandRel.select(
-        concat_ws("#", col("band_idx"), col("band_hash")).as("bk"),
-        col("doc_id").as("id"), col("hs").as("sh"))
-      return TiledKernels.blockJaccardPairs(rel, threshold, pin = pin)
-        .select("doc_a", "doc_b", "jac")
+      return tiled(aBands.select(bandKey, col("doc_id").as("id"),
+          col("hs").as("sh")))
+        .select(outCols.map(col): _*)
         .distinct()
-    }
     // carry: plain hash band join (auto proved every bucket under the
     // pair target, so saltedBlockJoin would degenerate to exactly this
     // plus a redundant count — the r7 gate-scale shape). A FORCED
     // "carry" skipped auto's fit check, so re-run it here: the
     // unspillable hash build is dropped (sort-merge spills and
     // survives) when it provably cannot fit — forcing the join SHAPE
-    // must not force the OOM. The build rows come from the call's one
-    // stats pass over the cached signature rel.
+    // must not force the OOM.
     val carryFits = strategy != "carry" || {
-      val total = stats.rows
-      val fits = Parallelism.hashBuildFits(total, SigRowBytes, spark)
-      if (!fits) Parallelism.logDispatch("minHashLshPairs",
-        s"forced carry: buildRows=$total won't fit — " +
+      val f = fits
+      if (!f) Parallelism.logDispatch(op,
+        s"forced carry: buildRows=${st.rows} won't fit — " +
           "shuffle_hash hint dropped (sort-merge spills)")
-      fits
+      f
     }
-    val a = bandRel.select(col("band_idx"), col("band_hash"),
+    val a = aBands.select(col("band_idx"), col("band_hash"),
       col("doc_id").as("doc_a"), col("hs").as("hs_a"))
-    val b0 = bandRel.select(col("band_idx"), col("band_hash"),
-      col("doc_id").as("doc_b"), col("hs").as("hs_b"))
-    val b = if (carryFits) b0.hint("shuffle_hash") else b0
-    a.join(b, Seq("band_idx", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
+    a.join(if (carryFits) b.hint("shuffle_hash") else b,
+        Seq("band_idx", "band_hash"))
+      .filter(pairPred)
       .withColumn("jac",
         HashExpressions.sortedJaccardGeq(col("hs_a"), col("hs_b"),
           threshold))
       .filter(col("jac") >= threshold)
-      .select("doc_a", "doc_b", "jac")
+      .select(outCols.map(col): _*)
       .distinct()
   }
+
+  /** The tile-rel block key of a band bucket. */
+  private def bandKey =
+    concat_ws("#", col("band_idx"), col("band_hash")).as("bk")
+
+  /** The refusal guard of the pair generators (`maxOutputPairs`,
+    * `maxCandidatePairs`): when `limit` > 0 and the candidate-pair
+    * `bound` exceeds it, throw with the routing recommendation instead
+    * of launching the join. */
+  private def guardPairs(op: String, limitName: String, limit: Long,
+      bound: => Long): Unit =
+    if (limit > 0L) {
+      val b = bound
+      if (b > limit) {
+        Parallelism.logDispatch(op,
+          s"candidatePairBound=$b > $limitName=$limit -> REFUSED " +
+            "(quadratic pair output; route to lshDupGroups for " +
+            "survivors/labels)")
+        throw new IllegalStateException(
+          s"$op: candidate pair volume ≈ $b exceeds $limitName=$limit. " +
+            "The pair output grows with Σ duplicate-family² — if you " +
+            "only need canonical labels/survivors, use " +
+            "Dedup.lshDupGroups (linear edge volume); to enumerate " +
+            "pairs anyway, raise or disable the bound.")
+      }
+      Parallelism.logDispatch(op,
+        s"candidatePairBound=$b <= $limitName=$limit -> ok")
+    }
 
   /** The minhash LSH band relation — (doc_id, hs, band_idx,
     * band_hash), one row per document per band. This IS the dedup
@@ -328,19 +349,15 @@ object Dedup {
   def incrementalNearDupPairs(newDocs: DataFrame, corpusBands: DataFrame,
       threshold: Double, pin: DataFrame => Unit = OperatorCaches.register,
       strategy: String = "auto", maxOutputPairs: Long = -1L): DataFrame = {
-    // Strategy mirrors [[minHashLshPairs]] (same sf10skew OOM
-    // post-mortem): "carry" = arrays through a plain hash band join,
-    // verify in-join — the gate/uniform shape; "tiled" =
-    // [[TiledKernels.bipartiteJaccardPairs]] grid tiles with the
-    // increment as the probe side — bounded tile memory whatever the
-    // bucket skew; "auto" dispatches on the max per-bucket pair count
-    // from one union-tagged narrow count. The b side unions the new
-    // batch's own index with the persisted corpus index — at scale the
-    // corpus side is a bucketed table on (band_idx, band_hash), and
-    // only buckets the increment actually touches contribute join
-    // work; the increment is never paired against corpus-corpus (the
-    // bipartite kernel keeps that property: corpus rows are never
-    // probe-side).
+    // Strategy as in [[minHashLshPairs]] (the shared [[minHashPairs]]
+    // body), with [[TiledKernels.bipartiteJaccardPairs]] as the tiled
+    // kernel and the increment as its probe side. The b side unions
+    // the new batch's own index with the persisted corpus index — at
+    // scale the corpus side is a bucketed table on (band_idx,
+    // band_hash), and only buckets the increment actually touches
+    // contribute join work; the increment is never paired against
+    // corpus-corpus (the bipartite kernel keeps that property: corpus
+    // rows are never probe-side).
     // lazy as in minHashLshPairs where the guard/stats/fit pass is the
     // first action (a single scan that populates the cache); a forced
     // "tiled" call without the guard goes straight to the bipartite
@@ -352,7 +369,7 @@ object Dedup {
     // aggregation per call: a bucket of na new and nb = na + nc docs
     // (nc indexed corpus) has na·nc + na·(na−1)/2 candidates, pair
     // proxy na·nb and nb build rows
-    lazy val stats = {
+    def stats = {
       val tagged = newBands.select(col("band_idx"), col("band_hash"))
         .withColumn("isNew", lit(1))
         .unionByName(corpusBands.select(col("band_idx"), col("band_hash"))
@@ -366,80 +383,20 @@ object Dedup {
           coalesce(sum(col("nb")), lit(0L))).head
       BucketStats(st.getLong(0), st.getLong(1), st.getLong(2))
     }
-    if (maxOutputPairs > 0L) {
-      // same guard as minHashLshPairs, bipartite form
-      val bound = stats.pairBound
-      if (bound > maxOutputPairs) {
-        Parallelism.logDispatch("incrementalNearDupPairs",
-          s"candidatePairBound=$bound > maxOutputPairs=$maxOutputPairs " +
-            "-> REFUSED (quadratic pair output; dedup callers that " +
-            "only need survivors should label via lshDupGroups over " +
-            "increment ∪ touched-bucket members)")
-        throw new IllegalStateException(
-          s"incrementalNearDupPairs: candidate pair volume ≈ $bound " +
-            s"exceeds maxOutputPairs=$maxOutputPairs — raise/disable " +
-            "the bound to enumerate pairs, or use the groups form for " +
-            "survivor labeling.")
-      }
-      Parallelism.logDispatch("incrementalNearDupPairs",
-        s"candidatePairBound=$bound <= maxOutputPairs=$maxOutputPairs -> ok")
-    }
     val bUnion = newBands.select(col("band_idx"), col("band_hash"),
         col("doc_id").as("doc_b"), col("hs").as("hs_b"))
         .withColumn("vs_corpus", lit(false))
       .unionByName(corpusBands.select(col("band_idx"), col("band_hash"),
         col("doc_id").as("doc_b"), col("hs").as("hs_b"))
         .withColumn("vs_corpus", lit(true)))
-    val chosen = strategy match {
-      case "auto" =>
-        val (mx, total) = (stats.maxBucketPairs, stats.rows)
-        val fits = Parallelism.hashBuildFits(total, SigRowBytes,
-          newDocs.sparkSession)
-        val pick = if (mx <= 2e7.toLong && fits) "carry" else "tiled"
-        Parallelism.logDispatch("incrementalNearDupPairs",
-          s"maxBucketPairs=$mx buildRows=$total buildFits=$fits -> $pick")
-        pick
-      case s @ ("carry" | "tiled") => s
-      case other => throw new IllegalArgumentException(
-        s"unknown incrementalNearDupPairs strategy '$other' (auto|carry|tiled)")
+    minHashPairs("incrementalNearDupPairs", newBands, bUnion, stats,
+      threshold, pin, strategy, maxOutputPairs,
+      col("vs_corpus") || col("doc_a") < col("doc_b"),
+      Seq("doc_a", "doc_b", "jac", "vs_corpus")) { aRel =>
+      TiledKernels.bipartiteJaccardPairs(aRel,
+        bUnion.select(bandKey, col("doc_b").as("id"), col("hs_b").as("sh"),
+          col("vs_corpus").as("vs")), threshold, pin = pin)
     }
-    if (chosen == "tiled") {
-      val aRel = newBands.select(
-        concat_ws("#", col("band_idx"), col("band_hash")).as("bk"),
-        col("doc_id").as("id"), col("hs").as("sh"))
-      val bRel = bUnion.select(
-        concat_ws("#", col("band_idx"), col("band_hash")).as("bk"),
-        col("doc_b").as("id"), col("hs_b").as("sh"),
-        col("vs_corpus").as("vs"))
-      return TiledKernels.bipartiteJaccardPairs(aRel, bRel, threshold,
-          pin = pin)
-        .select("doc_a", "doc_b", "jac", "vs_corpus")
-        .distinct()
-    }
-    // Forced-carry fit guard as in [[minHashLshPairs]]: the b side here
-    // is the increment's bands plus the whole corpus index, so a forced
-    // carry on a skewed corpus is exactly the unspillable-build OOM the
-    // auto path refuses — drop the hint when the build can't fit.
-    val carryFits = strategy != "carry" || {
-      val total = stats.rows
-      val fits = Parallelism.hashBuildFits(total, SigRowBytes,
-        newDocs.sparkSession)
-      if (!fits) Parallelism.logDispatch("incrementalNearDupPairs",
-        s"forced carry: buildRows=$total won't fit — " +
-          "shuffle_hash hint dropped (sort-merge spills)")
-      fits
-    }
-    val a = newBands.select(col("band_idx"), col("band_hash"),
-      col("doc_id").as("doc_a"), col("hs").as("hs_a"))
-    val bH = if (carryFits) bUnion.hint("shuffle_hash") else bUnion
-    a.join(bH, Seq("band_idx", "band_hash"))
-      .filter(col("vs_corpus") || col("doc_a") < col("doc_b"))
-      .withColumn("jac",
-        HashExpressions.sortedJaccardGeq(col("hs_a"), col("hs_b"),
-          threshold))
-      .filter(col("jac") >= threshold)
-      .select("doc_a", "doc_b", "jac", "vs_corpus")
-      .distinct()
   }
 
   /** Skew-safe LSH dedup GROUPS — the linear-cost production shape of
@@ -525,7 +482,7 @@ object Dedup {
     * caller surface ([[ngramJaccardPairs]]'s refusal turned into a
     * route): one narrow block-col scan measures the coarse-block
     * all-pairs candidate volume Σ_b n_b², and
-    *  - within `budgetPerDoc`·N (floor 10⁶ — the CurateCorpus auto
+    *  - within [[Parallelism.routeBudget]] (the CurateCorpus auto
     *    convention): the EXACT blocked n-gram jaccard pair list,
     *  - beyond it: the banded star-edge generator ([[lshStarEdges]],
     *    ≤ nBands·N edges by construction) — the linear route the
@@ -542,15 +499,10 @@ object Dedup {
     * exchange (the r12 sf100 DNF, measured: 3.2×10¹¹ candidates at
     * 5 M docs). Eager pre-pass contract as [[ngramJaccardPairs]]. */
   def jaccardEdgesAuto(docs: DataFrame, blockCols: Seq[String],
-      n: Int, threshold: Double, budgetPerDoc: Long = 256L,
+      n: Int, threshold: Double,
       pin: DataFrame => Unit = OperatorCaches.register): DataFrame = {
-    val stats = docs
-      .groupBy(blockCols.map(col): _*).agg(count(lit(1)).as("nb"))
-      .agg(coalesce(sum(col("nb") * col("nb")), lit(0L)).cast("long"),
-        coalesce(sum(col("nb")), lit(0L)).cast("long"))
-      .head
-    val (bound, nDocs) = (stats.getLong(0), stats.getLong(1))
-    val budget = math.max(budgetPerDoc * nDocs, 1000000L)
+    val (bound, nDocs) = Parallelism.blockPairStats(docs, blockCols)
+    val budget = Parallelism.routeBudget(nDocs)
     val pick = if (bound > budget) "starEdges" else "exactPairs"
     Parallelism.logDispatch("jaccardEdgesAuto",
       s"blockCandidateBound=$bound budget=$budget -> $pick")
@@ -621,68 +573,42 @@ object Dedup {
     // one narrow block-col scan serves BOTH the guard and the auto
     // dispatch (they need the same Σ_b n_b² statistic); lazy so the
     // forced-strategy unguarded paths stay zero-pre-pass
-    lazy val blockPairBound: Long = docs
-      .groupBy(blockCols.map(col): _*).agg(count(lit(1)).as("nb"))
-      .agg(coalesce(sum(col("nb") * col("nb")), lit(0L)).cast("long"))
-      .head.getLong(0)
-    if (maxCandidatePairs > 0L) {
-      val bound = blockPairBound
-      if (bound > maxCandidatePairs) {
-        Parallelism.logDispatch("ngramJaccardPairs",
-          s"candidatePairBound=$bound > maxCandidatePairs=" +
-            s"$maxCandidatePairs -> REFUSED (quadratic block join; " +
-            "route to lshDupGroups for survivors/labels)")
-        throw new IllegalStateException(
-          s"ngramJaccardPairs: all-pairs candidate volume ≈ $bound " +
-            s"exceeds maxCandidatePairs=$maxCandidatePairs. Block sizes " +
-            "grow with the corpus, so this volume is data-quadratic — " +
-            "if you only need near-dup edges/labels, use " +
-            "Dedup.lshDupGroups (linear edge volume); to enumerate " +
-            "exact jaccard pairs anyway, raise or disable the bound.")
-      }
-      Parallelism.logDispatch("ngramJaccardPairs",
-        s"candidatePairBound=$bound <= maxCandidatePairs=$maxCandidatePairs -> ok")
-    }
+    lazy val blockPairBound: Long =
+      Parallelism.blockPairStats(docs, blockCols)._1
+    guardPairs("ngramJaccardPairs", "maxCandidatePairs", maxCandidatePairs,
+      blockPairBound)
     val sh = Parallelism.widen(docs).select(
       (col("doc_id") +: blockCols.map(col)) :+
         HashExpressions.shingleHashes(col("text"), n).as("sh"): _*)
-    val chosen = strategy match {
-      case "auto" =>
-        // decision pass 1 (cheap, narrow scan of block cols only):
-        // all-pairs candidate volume Σ_b n_b². Below the dispatch
-        // bound the codegen'd salted join evaluates the whole pair
-        // space faster than the tiled kernel's fixed stages (extra
-        // count job, tile exchange, encoder decode — measured ~1.3 s
-        // flat at sf0.1/sf1); above it the join's sort-merge over
-        // wide shingle rows dominates (sf10: 233 s join vs 106 s
-        // tiled) and the kernel's in-merge early-exit pays.
-        val allPairsCands = blockPairBound
-        if (allPairsCands <= 2e8.toLong) {
-          Parallelism.logDispatch("ngramJaccardPairs",
-            s"cands=$allPairsCands -> allpairs")
-          "allpairs"
-        } else {
-          // decision pass 2 (4096-doc sample): average within-sample
-          // gram df. A bounded universe is dense even in a small
-          // sample (avg df ≫ 1 ⇒ df scales ∝ N ⇒ prefix degenerates);
-          // a growing universe shows avg df ≈ 1. All branches are
-          // exact, so the sample's file-order determinism only ever
-          // affects the PLAN, never the result. Dense + big ⇒ the
-          // tiled kernel (exact enumeration is Θ(Σ n_b²) for any
-          // order-based filter there — see the prefix note below).
-          val s = sh.select(explode(col("sh")).as("g")).limit(4096 * 256)
-            .agg(count(lit(1)).cast("double").as("tot"),
-              approx_count_distinct(col("g")).cast("double").as("uni"))
-            .head
-          val avgDf = s.getDouble(0) / math.max(s.getDouble(1), 1.0)
-          val pick = if (avgDf <= 2.0) "prefix" else "tiled"
-          Parallelism.logDispatch("ngramJaccardPairs",
-            f"cands=$allPairsCands avgDf=$avgDf%.2f -> $pick")
-          pick
-        }
-      case s @ ("allpairs" | "prefix" | "tiled") => s
-      case other => throw new IllegalArgumentException(
-        s"unknown ngramJaccardPairs strategy '$other' (auto|allpairs|prefix|tiled)")
+    val chosen = Parallelism.pickStrategy("ngramJaccardPairs", strategy,
+        Seq("allpairs", "prefix", "tiled")) {
+      // decision pass 1 (cheap, narrow scan of block cols only):
+      // all-pairs candidate volume Σ_b n_b². Below the dispatch
+      // bound the codegen'd salted join evaluates the whole pair
+      // space faster than the tiled kernel's fixed stages (extra
+      // count job, tile exchange, encoder decode — measured ~1.3 s
+      // flat at sf0.1/sf1); above it the join's sort-merge over
+      // wide shingle rows dominates (sf10: 233 s join vs 106 s
+      // tiled) and the kernel's in-merge early-exit pays.
+      val allPairsCands = blockPairBound
+      if (allPairsCands <= 2e8.toLong) ("allpairs", s"cands=$allPairsCands")
+      else {
+        // decision pass 2 (4096-doc sample): average within-sample
+        // gram df. A bounded universe is dense even in a small
+        // sample (avg df ≫ 1 ⇒ df scales ∝ N ⇒ prefix degenerates);
+        // a growing universe shows avg df ≈ 1. All branches are
+        // exact, so the sample's file-order determinism only ever
+        // affects the PLAN, never the result. Dense + big ⇒ the
+        // tiled kernel (exact enumeration is Θ(Σ n_b²) for any
+        // order-based filter there — see the prefix note below).
+        val s = sh.select(explode(col("sh")).as("g")).limit(4096 * 256)
+          .agg(count(lit(1)).cast("double").as("tot"),
+            approx_count_distinct(col("g")).cast("double").as("uni"))
+          .head
+        val avgDf = s.getDouble(0) / math.max(s.getDouble(1), 1.0)
+        (if (avgDf <= 2.0) "prefix" else "tiled",
+          f"cands=$allPairsCands avgDf=$avgDf%.2f")
+      }
     }
     if (chosen == "tiled") {
       // Tiled kernel, not a row join: in the salted-join shape every
@@ -869,18 +795,10 @@ object Dedup {
     // plain block join and skip saltedBlockJoin's own pre-pass (a
     // second identical count job). Forced "join" keeps the salted
     // form: a caller forcing it at scale still gets skew protection.
-    val chosen = strategy match {
-      case "auto" =>
-        val cands = embeddings.groupBy(col(blockCol))
-          .agg(count(lit(1)).as("nb"))
-          .agg(coalesce(sum(col("nb") * col("nb")), lit(0L))).head.getLong(0)
-        val pick = if (cands <= 1e7.toLong) "join-plain" else "tiled"
-        Parallelism.logDispatch("embeddingNearDupPairs",
-          s"cands=$cands -> $pick")
-        pick
-      case s @ ("join" | "tiled") => s
-      case other => throw new IllegalArgumentException(
-        s"unknown embeddingNearDupPairs strategy '$other' (auto|join|tiled)")
+    val chosen = Parallelism.pickStrategy("embeddingNearDupPairs", strategy,
+        Seq("join", "tiled")) {
+      val cands = Parallelism.blockPairStats(embeddings, Seq(blockCol))._1
+      (if (cands <= 1e7.toLong) "join-plain" else "tiled", s"cands=$cands")
     }
     if (chosen == "tiled") {
       val rel = embeddings.select(
@@ -1239,54 +1157,43 @@ object Dedup {
         pin(rel)
         rel
       }
-    // (strategy, proven upper bound on any block's na·nb for the dense
-    // leg's salted-join escape — the auto branch's Σ statistic bounds
-    // every single block; −1 = unproven, the salted join measures)
-    val (chosen, denseBound) = strategy match {
-      case "auto" =>
-        // Σ_blk batch_b × corpus_b from two narrow block-count scans —
-        // the dispatch statistic every sibling pair generator logs
-        // (lshPairBound / videoNearDupPairs' postings histogram)
-        val bb = newVecs.groupBy(blkOf(newVecs).as("blk"))
-          .agg(count(lit(1)).as("na"))
-        val cb = corpus.groupBy(blkOf(corpus).as("blk"))
-          .agg(count(lit(1)).as("nb"))
-        val dense = bb.join(cb, "blk")
-          .agg(coalesce(sum(col("na") * col("nb")), lit(0L))).head.getLong(0)
-        if (dense <= routeBound) {
-          Parallelism.logDispatch("incrementalEmbeddingNearDupPairs",
-            s"denseCandidates=$dense (Σ batch_b×corpus_b) " +
-              s"routeBound=$routeBound -> exact")
-          ("exact", dense)
-        } else {
-          // past the bound, price the routed volume too and take the
-          // cheaper EXACT plan: Σ over the batch's radius-probed cells
-          // of that cell's corpus count (one narrow assignment agg —
-          // the batch side is small by the operator's own contract)
-          val probeTable = cellProbeTable(cellRel, cents)
-          val r = math.sqrt(math.max(2.0 - 2.0 * threshold, 0.0))
-          val sizes = cellRel.groupBy("cell").agg(count(lit(1)).as("nc"))
-          val routed = newVecs.select(explode(
-              HashExpressions.cellsWithinRadius(
-                col("embedding"), probeTable, r)).as("cell"))
-            .join(sizes, "cell")
-            .agg(coalesce(sum(col("nc")), lit(0L))).head.getLong(0)
-          // candidates are not walls: a routed candidate is ~two
-          // orders costlier than a salted-dense one (measured —
-          // [[RoutedCostFactor]]), so the comparison is cost-weighted
-          val pick =
-            if (routed * RoutedCostFactor < dense) "cells" else "exact"
-          Parallelism.logDispatch("incrementalEmbeddingNearDupPairs",
-            s"denseCandidates=$dense routedCandidates=$routed " +
-              s"(radius-probed cells, cost factor $RoutedCostFactor) " +
-              s"routeBound=$routeBound -> $pick")
-          (pick, dense)
-        }
-      case s @ ("exact" | "cells") => (s, -1L)
-      case other => throw new IllegalArgumentException(
-        s"unknown incrementalEmbeddingNearDupPairs strategy '$other' " +
-          "(auto|exact|cells)")
+    // Σ_blk batch_b × corpus_b from two narrow block-count scans — the
+    // dispatch statistic every sibling pair generator logs
+    // (lshPairBound / videoNearDupPairs' postings histogram)
+    lazy val dense = Parallelism.bipartitePairCount(
+      newVecs.select(blkOf(newVecs).as("blk")),
+      corpus.select(blkOf(corpus).as("blk")), Seq("blk"))
+    val chosen = Parallelism.pickStrategy("incrementalEmbeddingNearDupPairs",
+        strategy, Seq("exact", "cells")) {
+      if (dense <= routeBound)
+        ("exact", s"denseCandidates=$dense (Σ batch_b×corpus_b) " +
+          s"routeBound=$routeBound")
+      else {
+        // past the bound, price the routed volume too and take the
+        // cheaper EXACT plan: Σ over the batch's radius-probed cells
+        // of that cell's corpus count (one narrow assignment agg —
+        // the batch side is small by the operator's own contract)
+        val probeTable = cellProbeTable(cellRel, cents)
+        val r = math.sqrt(math.max(2.0 - 2.0 * threshold, 0.0))
+        val sizes = cellRel.groupBy("cell").agg(count(lit(1)).as("nc"))
+        val routed = newVecs.select(explode(
+            HashExpressions.cellsWithinRadius(
+              col("embedding"), probeTable, r)).as("cell"))
+          .join(sizes, "cell")
+          .agg(coalesce(sum(col("nc")), lit(0L))).head.getLong(0)
+        // candidates are not walls: a routed candidate is ~two
+        // orders costlier than a salted-dense one (measured —
+        // [[RoutedCostFactor]]), so the comparison is cost-weighted
+        (if (routed * RoutedCostFactor < dense) "cells" else "exact",
+          s"denseCandidates=$dense routedCandidates=$routed " +
+            s"(radius-probed cells, cost factor $RoutedCostFactor) " +
+            s"routeBound=$routeBound")
+      }
     }
+    // the auto statistic bounds every single block's na·nb, so the
+    // dense leg's salted join takes its escape with no stats job;
+    // −1 = unproven (a forced strategy), the salted join measures
+    val denseBound = if (strategy == "auto") dense else -1L
     val vsCorpusLeg =
       if (chosen == "exact") denseVsCorpus(denseBound)
       else
@@ -1595,57 +1502,78 @@ object Dedup {
     * this shape moves payload bytes proportional to survivors. */
   def editDistancePairs(docs: DataFrame, blockCols: Seq[String],
       maxDist: Int, prefilterGram: Int = 0,
-      strategy: String = "auto"): DataFrame = {
-    val w = maxDist + 1
-    val chosen = strategy match {
-      case "auto" =>
-        val cands = editBandCandidates(docs, docs, blockCols, w)
-        val pick = if (cands <= 1e7.toLong) "join" else "tiled"
-        Parallelism.logDispatch("editDistancePairs", s"cands=$cands -> $pick")
-        pick
-      // explicit match: a typo ("tile") must fail fast, not silently
-      // select the join path that fills disks at scale
-      case s @ ("join" | "tiled") => s
-      case other => throw new IllegalArgumentException(
-        s"unknown editDistancePairs strategy '$other' (auto|join|tiled)")
+      strategy: String = "auto"): DataFrame =
+    editPairs(docs, docs, self = true, blockCols, maxDist, prefilterGram,
+      editStrategy("editDistancePairs", strategy, docs, docs, blockCols,
+        maxDist))
+
+  /** The edit-distance operators' dispatch: `auto` counts the exact
+    * candidate volume the band join (or tile kernel) will enumerate —
+    * Σ n_a·n_b over (block, length bucket) cells with the a side
+    * 3-probed — and keeps the join up to 10⁷ candidates. */
+  private def editStrategy(op: String, strategy: String, aDocs: DataFrame,
+      bDocs: DataFrame, blockCols: Seq[String], maxDist: Int): String =
+    Parallelism.pickStrategy(op, strategy, Seq("join", "tiled")) {
+      def cells(df: DataFrame, probe: Boolean) = df.select(blockCols.map(col) :+
+        lenBucket(length(col("text")), maxDist + 1, probe).as("bkt"): _*)
+      val cands = Parallelism.bipartitePairCount(cells(aDocs, probe = true),
+        cells(bDocs, probe = false), blockCols :+ "bkt")
+      (if (cands <= 1e7.toLong) "join" else "tiled", s"cands=$cands")
     }
+
+  /** Length bucket of width `w`; the probing side explodes to its own
+    * and both adjacent buckets, which covers |len_a − len_b| < w
+    * losslessly (each pair meets in exactly one bucket, the
+    * non-probing side's). */
+  private def lenBucket(len: org.apache.spark.sql.Column, w: Int,
+      probe: Boolean): org.apache.spark.sql.Column =
+    if (probe) explode(array(floor(len / w) - 1, floor(len / w),
+      floor(len / w) + 1))
+    else floor(len / w)
+
+  /** Edit-distance pairs of `aDocs` against `bDocs` on the `chosen`
+    * route: the tile kernel, or the slim 3-probe length-bucket band
+    * join resolved by [[resolveEditPairs]]. `self` = both sides are
+    * one table, so each pair is kept once (doc_a < doc_b). */
+  private def editPairs(aDocs: DataFrame, bDocs: DataFrame, self: Boolean,
+      blockCols: Seq[String], maxDist: Int, prefilterGram: Int,
+      chosen: String): DataFrame = {
+    val w = maxDist + 1
     if (chosen == "tiled")
       return TiledKernels.bipartiteEditPairs(
-        editTileRel(docs, blockCols, w, probe = true, prefilterGram),
-        editTileRel(docs, blockCols, w, probe = false, prefilterGram),
-        maxDist, prefilterGram, orderCheck = true)
-    val slim = docs.select(
-      (col("doc_id") +: blockCols.map(col)) :+
-        length(col("text")).as("len"): _*)
-    val a = slim.select(
-      (col("doc_id").as("doc_a") +: blockCols.map(col)) :+
-        col("len").as("len_a"): _*)
-      .withColumn("bkt", explode(array(
-        floor(col("len_a") / w) - 1,
-        floor(col("len_a") / w),
-        floor(col("len_a") / w) + 1)))
-    val b = slim.select(
-      (col("doc_id").as("doc_b") +: blockCols.map(col)) :+
-        col("len").as("len_b"): _*)
-      .withColumn("bkt", floor(col("len_b") / w))
-    val banded = a.join(b, blockCols :+ "bkt")
-      .filter(col("doc_a") < col("doc_b"))
+        editTileRel(aDocs, blockCols, w, probe = true, prefilterGram),
+        editTileRel(bDocs, blockCols, w, probe = false, prefilterGram),
+        maxDist, prefilterGram, orderCheck = self)
+    def slim(df: DataFrame, side: String, probe: Boolean) = df.select(
+        (col("doc_id").as(s"doc_$side") +: blockCols.map(col)) :+
+          length(col("text")).as(s"len_$side"): _*)
+      .withColumn("bkt", lenBucket(col(s"len_$side"), w, probe))
+    val joined = slim(aDocs, "a", probe = true)
+      .join(slim(bDocs, "b", probe = false), blockCols :+ "bkt")
+    val banded = (if (self) joined.filter(col("doc_a") < col("doc_b"))
+        else joined)
       .filter(abs(col("len_a") - col("len_b")) <= maxDist)
       .select("doc_a", "doc_b", "len_a", "len_b")
-    resolveEditPairs(docs, banded, maxDist, prefilterGram)
+    // the two sides of an increment join come from different tables:
+    // resolve payloads from their union (ids are disjoint between
+    // increment and corpus)
+    val payloads =
+      if (self) aDocs
+      else aDocs.select("doc_id", "text")
+        .unionByName(bDocs.select("doc_id", "text"))
+    resolveEditPairs(payloads, banded, maxDist, prefilterGram)
   }
 
   /** Tile-relation side for the kernel edit-distance path: block key =
-    * block cols + length bucket (the a side probes 3 buckets — the
-    * same lossless |len_a − len_b| ≤ maxDist cover as the join shape;
-    * each pair meets in exactly one bucket, the non-probing side's).
-    * Shingle arrays ride along only when the gram prune is on. */
+    * block cols + [[lenBucket]] (the same lossless
+    * |len_a − len_b| ≤ maxDist cover as the join shape). Shingle arrays
+    * ride along only when the gram prune is on. */
   private def editTileRel(docs: DataFrame, blockCols: Seq[String],
       w: Int, probe: Boolean, prefilterGram: Int): DataFrame = {
     // a null block col never equi-joins in the join shape — drop such
     // rows before keying (to_json omits null fields, which would
     // otherwise merge distinct null-keyed blocks)
-    val base = docs
+    docs
       .filter(blockCols.map(col(_).isNotNull).reduce(_ && _))
       .select((col("doc_id").as("id") +:
         length(col("text")).as("len") +: col("text") +:
@@ -1653,35 +1581,10 @@ object Dedup {
           HashExpressions.shingleHashes(col("text"), prefilterGram).as("sh")
         else lit(null).cast("array<long>").as("sh")) +:
         blockCols.map(col)): _*)
-    val bucketed =
-      if (probe) base.withColumn("bkt", explode(array(
-        floor(col("len") / w) - 1, floor(col("len") / w),
-        floor(col("len") / w) + 1)))
-      else base.withColumn("bkt", floor(col("len") / w))
-    bucketed.select(
-      to_json(struct((blockCols.map(col) :+ col("bkt")): _*)).as("bk"),
-      col("id"), col("len"), col("text"), col("sh"))
-  }
-
-  /** Σ n_a·n_b over (block, bucket) cells with the a side 3-probed —
-    * the exact candidate count the band join (or tile kernel) will
-    * enumerate, from two narrow scans. */
-  private def editBandCandidates(aDocs: DataFrame, bDocs: DataFrame,
-      blockCols: Seq[String], w: Int): Long = {
-    def cnt(df: DataFrame, probe: Boolean, as: String) = {
-      val slim = df.select(
-        (blockCols.map(col) :+ length(col("text")).as("len")): _*)
-      val b =
-        if (probe) slim.withColumn("bkt", explode(array(
-          floor(col("len") / w) - 1, floor(col("len") / w),
-          floor(col("len") / w) + 1)))
-        else slim.withColumn("bkt", floor(col("len") / w))
-      b.groupBy((blockCols.map(col) :+ col("bkt")): _*)
-        .agg(count(lit(1)).as(as))
-    }
-    cnt(aDocs, probe = true, "na")
-      .join(cnt(bDocs, probe = false, "nb"), blockCols :+ "bkt")
-      .agg(coalesce(sum(col("na") * col("nb")), lit(0L))).head.getLong(0)
+      .withColumn("bkt", lenBucket(col("len"), w, probe))
+      .select(
+        to_json(struct((blockCols.map(col) :+ col("bkt")): _*)).as("bk"),
+        col("id"), col("len"), col("text"), col("sh"))
   }
 
   /** Shared tail of the edit-distance operators: candidate (doc_a,
@@ -1754,52 +1657,14 @@ object Dedup {
   def incrementalEditDistancePairs(newDocs: DataFrame, corpus: DataFrame,
       blockCols: Seq[String], maxDist: Int,
       prefilterGram: Int = 0, strategy: String = "auto"): DataFrame = {
-    val w = maxDist + 1
-    val chosen = strategy match {
-      case "auto" =>
-        // one strategy for both halves: the vs-corpus candidate count
-        // dominates (|increment|·|block| vs |increment|²/blocks)
-        {
-          val cands = editBandCandidates(newDocs, corpus, blockCols, w)
-          val pick = if (cands <= 1e7.toLong) "join" else "tiled"
-          Parallelism.logDispatch("incrementalEditDistancePairs",
-            s"cands=$cands -> $pick")
-          pick
-        }
-      case s @ ("join" | "tiled") => s
-      case other => throw new IllegalArgumentException(
-        s"unknown incrementalEditDistancePairs strategy '$other' (auto|join|tiled)")
-    }
-    val vsCorpus = (if (chosen == "tiled") {
-      TiledKernels.bipartiteEditPairs(
-        editTileRel(newDocs, blockCols, w, probe = true, prefilterGram),
-        editTileRel(corpus, blockCols, w, probe = false, prefilterGram),
-        maxDist, prefilterGram, orderCheck = false)
-    } else {
-      def slim(df: DataFrame, idAs: String, lenAs: String) =
-        df.select(
-          (col("doc_id").as(idAs) +: blockCols.map(col)) :+
-            length(col("text")).as(lenAs): _*)
-      val a = slim(newDocs, "doc_a", "len_a")
-        .withColumn("bkt", explode(array(
-          floor(col("len_a") / w) - 1,
-          floor(col("len_a") / w),
-          floor(col("len_a") / w) + 1)))
-      val b = slim(corpus, "doc_b", "len_b")
-        .withColumn("bkt", floor(col("len_b") / w))
-      val banded = a.join(b, blockCols :+ "bkt")
-        .filter(abs(col("len_a") - col("len_b")) <= maxDist)
-        .select("doc_a", "doc_b", "len_a", "len_b")
-      // the two sides come from different tables: resolve payloads from
-      // their union (ids are disjoint between increment and corpus)
-      val all = newDocs.select("doc_id", "text")
-        .unionByName(corpus.select("doc_id", "text"))
-      resolveEditPairs(all, banded, maxDist, prefilterGram)
-    }).withColumn("vs_corpus", lit(true))
-    val vsNew = editDistancePairs(newDocs, blockCols, maxDist,
-        prefilterGram, strategy = chosen)
-      .withColumn("vs_corpus", lit(false))
-    vsCorpus.unionByName(vsNew)
+    // one strategy for both halves: the vs-corpus candidate count
+    // dominates (|increment|·|block| vs |increment|²/blocks)
+    val chosen = editStrategy("incrementalEditDistancePairs", strategy,
+      newDocs, corpus, blockCols, maxDist)
+    def leg(bDocs: DataFrame, self: Boolean) =
+      editPairs(newDocs, bDocs, self, blockCols, maxDist, prefilterGram,
+        chosen).withColumn("vs_corpus", lit(!self))
+    leg(corpus, self = false).unionByName(leg(newDocs, self = true))
   }
 
   /** Semantic deduplication, cluster-then-prune (the SemDeDup shape —

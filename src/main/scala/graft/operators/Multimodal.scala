@@ -458,7 +458,7 @@ object Multimodal {
     val budget: Long =
       if (autoBudgetPerDoc > 0) {
         val nDocs = sets.select("doc_id").distinct().count()
-        val b = math.max(autoBudgetPerDoc.toLong * nDocs, budgetFloor)
+        val b = Parallelism.routeBudget(nDocs, autoBudgetPerDoc, budgetFloor)
         Parallelism.logDispatch("videoNearDupPairs",
           s"autoBudget: nDocs=$nDocs -> maxCandidatePairs=$b " +
             s"($autoBudgetPerDoc/doc, floor $budgetFloor)")

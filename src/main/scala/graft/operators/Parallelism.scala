@@ -28,6 +28,60 @@ object Parallelism {
   def logDispatch(op: String, detail: String): Unit =
     System.err.println(s"[graft.dispatch] $op: $detail")
 
+  /** The one strategy dispatch of the pair generators: `"auto"`
+    * evaluates `auto` exactly once — it returns the pick and the
+    * statistics that decided it — and logs one `[graft.dispatch]
+    * op: … -> pick` line; a name in `forced` is returned as given, with
+    * no statistics pass and no line; anything else throws naming the
+    * allowed set. The one place a dispatch record or cost model
+    * changes. */
+  def pickStrategy(op: String, strategy: String, forced: Seq[String])(
+      auto: => (String, String)): String = strategy match {
+    case "auto" =>
+      val (pick, why) = auto
+      logDispatch(op, s"$why -> $pick")
+      pick
+    case s if forced.contains(s) => s
+    // a typo must fail fast, not silently select a path that fills
+    // disks at scale
+    case other => throw new IllegalArgumentException(
+      s"unknown $op strategy '$other' (${("auto" +: forced).mkString("|")})")
+  }
+
+  /** Candidate-pair budget of the pairs-vs-linear routes: `perDoc`
+    * candidate pairs per document, at least `floor` so that tiny runs
+    * never flap. 256/doc: a corpus whose candidate mass is O(1) per
+    * doc stays linear however big it grows (the campaign's uniform
+    * corpus measures ~186/doc at both 50 k and 500 k docs), while
+    * quadratic duplicate families push the per-doc rate unbounded
+    * (gen_skew: 94/doc at 50 k, 938/doc at 500 k); 32/doc was measured
+    * too tight — it flipped the linear uniform corpus too. */
+  def routeBudget(docs: Long, perDoc: Long = 256L,
+      floor: Long = 1000000L): Long =
+    math.max(perDoc * docs, floor)
+
+  /** (Σ n_b², Σ n_b) over the blocks of `df` keyed by `blockCols`: the
+    * all-pairs candidate volume of a blocked self-join and its row
+    * count, from one narrow aggregation. */
+  def blockPairStats(df: DataFrame, blockCols: Seq[String]): (Long, Long) = {
+    val st = df.groupBy(blockCols.map(col): _*).agg(count(lit(1)).as("nb"))
+      .agg(coalesce(sum(col("nb") * col("nb")), lit(0L)).cast("long"),
+        coalesce(sum(col("nb")), lit(0L)).cast("long"))
+      .head
+    (st.getLong(0), st.getLong(1))
+  }
+
+  /** Σ n_a·n_b over the blocks `keys` of two sides: the candidate
+    * volume of a bipartite block join, from one narrow count per side.
+    * A block absent from either side contributes nothing. */
+  def bipartitePairCount(a: DataFrame, b: DataFrame,
+      keys: Seq[String]): Long = {
+    def counts(df: DataFrame, as: String) =
+      df.groupBy(keys.map(col): _*).agg(count(lit(1)).as(as))
+    counts(a, "na").join(counts(b, "nb"), keys)
+      .agg(coalesce(sum(col("na") * col("nb")), lit(0L))).head.getLong(0)
+  }
+
   /** Default per-task pair budget for [[saltedBlockJoin]] — exposed so
     * a caller that passes a `pairBound` can predict whether the
     * zero-stats-job escape will fire (bound ≤ this) and adapt its own
@@ -99,22 +153,27 @@ object Parallelism {
     math.min(totalBytes, perPartBytes * slots) <= pool / 2.0
   }
 
-  /** Even out `df` for heavy downstream per-row compute. ALWAYS
-    * repartitions (round-robin), never narrows. The former
-    * `getNumPartitions < target` no-op was a measured lie at scale: a
-    * single 522 MB parquet file with ~4 large row groups splits into
-    * 32 byte-range tasks of which only ~4 are non-empty (a row group
-    * belongs to the split holding its midpoint), so the partition
-    * COUNT said "wide" while the ROWS sat on 4 cores — the 2 M-vector
-    * routed-ANN campaign ran its quantizer fits and index encode at
-    * 4/32 threads behind that check (rows, not splits — the tile-
-    * kernel lesson again). Call sites gate work that is orders of
+  /** Even out `df` for heavy downstream per-row compute: a round-robin
+    * repartition to the session's default parallelism, always. The
+    * former `getNumPartitions < target` no-op was a measured lie at
+    * scale: a single 522 MB parquet file with ~4 large row groups
+    * splits into 32 byte-range tasks of which only ~4 are non-empty (a
+    * row group belongs to the split holding its midpoint), so the
+    * partition COUNT said "wide" while the ROWS sat on 4 cores — the
+    * 2 M-vector routed-ANN campaign ran its quantizer fits and index
+    * encode at 4/32 threads behind that check (rows, not splits — the
+    * tile-kernel lesson again). Call sites gate work that is orders of
     * magnitude heavier than one linear exchange of their input; that
-    * exchange is the insurance premium, paid unconditionally. */
-  def widen(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    df.repartition(math.max(target, df.rdd.getNumPartitions))
-  }
+    * exchange is the insurance premium, paid unconditionally.
+    *
+    * The input's partition count is never read: under AQE
+    * `df.rdd.getNumPartitions` runs the input's shuffle stages at call
+    * time, the consuming action then runs them again, and an
+    * Observation beneath the input reads 0. An input already wider
+    * than the core count is therefore narrowed to one partition per
+    * core (QUIRKS.md). */
+  def widen(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Partition count for an explicit (AQE-exempt) repartition that
     * replaces a planner exchange in front of CPU-dense per-row work:

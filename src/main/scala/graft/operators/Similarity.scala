@@ -83,18 +83,10 @@ object Similarity {
     * under Spark NaN/-0.0 comparison semantics. */
   def blockedNearestNeighbor(embeddings: DataFrame,
       blockCol: String, strategy: String = "auto"): DataFrame = {
-    val chosen = strategy match {
-      case "auto" =>
-        val cands = embeddings.groupBy(col(blockCol))
-          .agg(count(lit(1)).as("nb"))
-          .agg(coalesce(sum(col("nb") * col("nb")), lit(0L))).head.getLong(0)
-        val pick = if (cands <= 2e8.toLong) "join" else "tiled"
-        Parallelism.logDispatch("blockedNearestNeighbor",
-          s"cands=$cands -> $pick")
-        pick
-      case s @ ("join" | "tiled") => s
-      case other => throw new IllegalArgumentException(
-        s"unknown blockedNearestNeighbor strategy '$other' (auto|join|tiled)")
+    val chosen = Parallelism.pickStrategy("blockedNearestNeighbor", strategy,
+        Seq("join", "tiled")) {
+      val cands = Parallelism.blockPairStats(embeddings, Seq(blockCol))._1
+      (if (cands <= 2e8.toLong) "join" else "tiled", s"cands=$cands")
     }
     if (chosen == "tiled") {
       val rel = embeddings.select(
@@ -1203,52 +1195,44 @@ object Similarity {
       k: Int, probeBits: Int = 0, annMode: String = "auto",
       candidatesPerQuery: Long = 4096L,
       pin: DataFrame => Unit = OperatorCaches.register): DataFrame = {
-    require(annMode == "lsh" || annMode == "ivfadc" || annMode == "auto",
-      s"annMode lsh|ivfadc|auto, got $annMode")
-    val n = embeddings.count()
-    val planes = autoPlanes(n, nBands)
-    val budget = candidatesPerQuery * math.max(n, 1L)
-    val chosen = annMode match {
-      case m @ ("lsh" | "ivfadc") => m
-      case "auto" =>
-        val worst = // all rows in one bucket per band — zero-job bound
-          if (n < 1000000L) nBands.toLong * n * (n - 1) * (probeBits + 1)
-          else Long.MaxValue
-        // second zero-job shortcut: if even the DEGENERATE join volume
-        // (every vector in one bucket, n² pairs) fits the salted join's
-        // plain-join escape, the LSH engine is bounded-cheap no matter
-        // the bucket distribution — measuring the real bound could only
-        // re-confirm lsh, so don't spend the stats job (this keeps the
-        // gate/bench scales at zero routing overhead)
-        val degenerate =
-          if (n < 3037000499L) n * n else Long.MaxValue
-        if (worst <= budget ||
-            (degenerate <= Parallelism.DefaultTargetPairsPerTask &&
-              degenerate <= budget)) {
-          Parallelism.logDispatch("lshTopKAuto",
-            s"annMode=auto worstCaseBound=$worst budget=$budget " +
-              s"degenerate=$degenerate -> lsh (zero-job)")
-          "lsh"
-        } else {
-          // the Dedup.lshPairBound shape: cache the signature rel
-          // (plan-identical to the one lshTopK will read — shared
-          // materialization), one narrow agg for the bucket statistic
-          val sigs = lshSigRel(embeddings, planes, nBands)
-            .withColumn("nrm", l2Norm(col("embedding")))
-            .cache()
-          pin(sigs)
-          val bound = sigs
-            .select(posexplode(col("bnds")).as(Seq("band_idx", "band_hash")))
-            .groupBy("band_idx", "band_hash").agg(count(lit(1)).as("nb"))
-            .agg(coalesce(sum(col("nb") * (col("nb") - 1)), lit(0L))
-              .cast("long"))
-            .head.getLong(0) * (probeBits + 1)
-          val pick = if (bound > budget) "ivfadc" else "lsh"
-          Parallelism.logDispatch("lshTopKAuto",
-            s"annMode=auto candidateBound=$bound budget=$budget -> $pick")
-          if (pick == "ivfadc") sigs.unpersist() // routed away — free it
-          pick
-        }
+    // lazy: an unknown or forced-ivfadc mode runs no count job
+    lazy val n = embeddings.count()
+    lazy val planes = autoPlanes(n, nBands)
+    lazy val budget = candidatesPerQuery * math.max(n, 1L)
+    val chosen = Parallelism.pickStrategy("lshTopKAuto", annMode,
+        Seq("lsh", "ivfadc")) {
+      val worst = // all rows in one bucket per band — zero-job bound
+        if (n < 1000000L) nBands.toLong * n * (n - 1) * (probeBits + 1)
+        else Long.MaxValue
+      // second zero-job shortcut: if even the DEGENERATE join volume
+      // (every vector in one bucket, n² pairs) fits the salted join's
+      // plain-join escape, the LSH engine is bounded-cheap no matter
+      // the bucket distribution — measuring the real bound could only
+      // re-confirm lsh, so don't spend the stats job (this keeps the
+      // gate/bench scales at zero routing overhead)
+      val degenerate =
+        if (n < 3037000499L) n * n else Long.MaxValue
+      if (worst <= budget ||
+          (degenerate <= Parallelism.DefaultTargetPairsPerTask &&
+            degenerate <= budget))
+        ("lsh", s"annMode=auto worstCaseBound=$worst budget=$budget " +
+          s"degenerate=$degenerate, zero-job")
+      else {
+        // the Dedup.lshPairBound shape: cache the signature rel
+        // (plan-identical to the one lshTopK will read — shared
+        // materialization), one narrow agg for the bucket statistic
+        val sigs = lshSigRel(embeddings, planes, nBands)
+          .withColumn("nrm", l2Norm(col("embedding")))
+          .cache()
+        pin(sigs)
+        // Σ n·(n−1) directed candidates: twice the pair bound
+        val bound = 2L * Dedup.bucketStatsOf(sigs.select(
+            posexplode(col("bnds")).as(Seq("band_idx", "band_hash"))))
+          .pairBound * (probeBits + 1)
+        val pick = if (bound > budget) "ivfadc" else "lsh"
+        if (pick == "ivfadc") sigs.unpersist() // routed away — free it
+        (pick, s"annMode=auto candidateBound=$bound budget=$budget")
+      }
     }
     if (chosen == "ivfadc")
       return ivfAdcCosineSelfTopK(embeddings, k)

@@ -763,4 +763,76 @@ class CurationOpsSpec extends AnyFunSuite {
       unguarded.exceptAll(guarded).isEmpty)
     spark.sharedState.cacheManager.clearCache()
   }
+  // three 20-variant families (each variant swaps one word of its
+  // template) beside 20 unrelated docs: near-dup pairs inside every
+  // family, none across
+  private def variantDocs = {
+    val templates = Seq(
+      "the quick brown fox jumps over the lazy dog near the quiet river bank today",
+      "a data pipeline reads every log line parses the job tree and writes hourly usage",
+      "near duplicate detection pairs documents whose shingle sets overlap above a bound")
+    ((for ((t, ti) <- templates.zipWithIndex; v <- 0 until 20) yield {
+      val w = t.split(" ")
+      w(v % w.length) = s"w$v"
+      ((ti * 100 + v).toLong, w.mkString(" "))
+    }) ++ (0 until 20).map(i =>
+      (1000L + i, s"unrelated note $i about topic ${i * 37} with words ${i * 11}")))
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
+  }
+
+  test("minhash pairs: forced carry ≡ forced tiled ≡ auto, self-join and increment") {
+    val docs = variantDocs
+    val register = graft.operators.OperatorCaches.register _
+    def same(runs: Seq[org.apache.spark.sql.DataFrame]): Unit = {
+      assert(runs.head.count() > 0) // non-vacuous at this threshold
+      runs.tail.foreach(r =>
+        assert(runs.head.exceptAll(r).isEmpty && r.exceptAll(runs.head).isEmpty))
+    }
+    same(Seq("carry", "tiled", "auto").map(
+      Dedup.minHashLshPairs(docs, 0.5, register, _)))
+    val isNew = col("doc_id") % 100 >= 10
+    val idx = Dedup.minHashBandRel(docs.filter(!isNew))
+    same(Seq("carry", "tiled", "auto").map(st => Dedup.incrementalNearDupPairs(
+      docs.filter(isNew), idx, 0.5, strategy = st)))
+    spark.sharedState.cacheManager.clearCache()
+  }
+
+  test("every strategy dispatcher rejects an unknown strategy") {
+    implicit val session: SparkSession = spark
+    val docs = variantDocs
+    val emb = Seq((1L, 0, Array(1.0f, 0.0f)), (2L, 0, Array(0.9f, 0.1f)),
+      (3L, 1, Array(0.0f, 1.0f)), (4L, 1, Array(0.1f, 0.9f)))
+      .toDF("vec_id", "label", "embedding")
+    val isNew = col("doc_id") % 100 >= 10
+    val (newDocs, oldDocs) = (docs.filter(isNew), docs.filter(!isNew))
+    val dispatchers: Seq[(String, () => Any)] = Seq(
+      "minHashLshPairs" -> (() => Dedup.minHashLshPairs(docs, 0.5,
+        graft.operators.OperatorCaches.register, "bogus")),
+      "incrementalNearDupPairs" -> (() => Dedup.incrementalNearDupPairs(
+        newDocs, Dedup.minHashBandRel(oldDocs), 0.5, strategy = "bogus")),
+      "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs,
+        Seq("lang", "source"), 3, 0.5, strategy = "bogus")),
+      "embeddingNearDupPairs" -> (() =>
+        Dedup.embeddingNearDupPairs(emb, "label", 0.9, strategy = "bogus")),
+      "incrementalEmbeddingNearDupPairs" -> (() =>
+        Dedup.incrementalEmbeddingNearDupPairs(emb.filter(col("vec_id") % 2 === 0),
+          emb.filter(col("vec_id") % 2 =!= 0), "label", 0.9, strategy = "bogus")),
+      "editDistancePairs" -> (() => Dedup.editDistancePairs(docs,
+        Seq("lang", "source"), 5, strategy = "bogus")),
+      "incrementalEditDistancePairs" -> (() => Dedup.incrementalEditDistancePairs(
+        newDocs, oldDocs, Seq("lang", "source"), 5, strategy = "bogus")),
+      "blockedNearestNeighbor" -> (() => graft.operators.Similarity
+        .blockedNearestNeighbor(emb, "label", strategy = "bogus")),
+      "lshTopKAuto" -> (() => graft.operators.Similarity.lshTopKAuto(emb,
+        dim = 2, nBands = 4, k = 1, annMode = "bogus")),
+      "CurateCorpus.nearDup" -> (() => graft.app.CurateCorpus.run(docs,
+        docs.limit(1), java.nio.file.Files.createTempDirectory("bogus").toString,
+        dedupMode = "bogus")))
+    for ((op, call) <- dispatchers) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"unknown $op strategy 'bogus'"), op)
+    }
+    spark.sharedState.cacheManager.clearCache()
+  }
 }

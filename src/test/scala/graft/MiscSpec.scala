@@ -79,6 +79,19 @@ class MiscSpec extends AnyFunSuite {
     assert(builders.isEmpty, s"SparkSession.builder( outside GraftSession: $builders")
   }
 
+  test("every strategy dispatch goes through Parallelism.pickStrategy") {
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val dispatch = "\\b(strategy|annMode|dedupMode)\\s+match\\b".r
+    val walk = java.nio.file.Files.walk(root)
+    val sites = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Parallelism.scala")
+      .filter(p => dispatch.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+      .toList finally walk.close()
+    assert(sites.isEmpty, s"strategy match outside the picker: $sites")
+  }
+
   test("ledger diff: added / changed-mtime / removed (T2/T3)") {
     val ledger = Seq(FileState("a", 1L), FileState("b", 1L), FileState("c", 1L))
     val current = Seq(FileState("a", 1L), FileState("b", 2L), FileState("d", 1L))

@@ -114,4 +114,34 @@ class ParallelismSpec extends AnyFunSuite {
       targetPairsPerTask = 1L) // force the salted path
     assert(canon(j) == Set(("hot", 2, 3)))
   }
+  test("widen starts no Spark job at call time; an Observation beneath it reads every row") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // a shuffled input: under AQE, reading its partition count would
+    // run the aggregation's shuffle stage right here
+    val obs = org.apache.spark.sql.Observation()
+    val in = spark.range(0, 1000, 1, 8)
+      .groupBy((col("id") % 100).as("k")).agg(count(lit(1)).as("n"))
+      .observe(obs, count(lit(1)).as("rows"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "marker"))
+          marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val widened = try {
+      val w = Parallelism.widen(in)
+      // the listener bus is FIFO: once the marker job's start arrives,
+      // every job started by the call has been seen
+      spark.sparkContext.setJobGroup("marker", "listener barrier")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      w
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() == 0, s"${jobs.get()} Spark jobs at widen's call time")
+    assert(widened.collect().length == 100)
+    assert(obs.get("rows") == 100L)
+  }
 }
