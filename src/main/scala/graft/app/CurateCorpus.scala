@@ -1,7 +1,7 @@
 package graft.app
 
 import graft.operators.{Corpus, Dedup, Parallelism}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -78,8 +78,7 @@ object CurateCorpus {
     //  - every stage count is an Observation on a node that an action
     //    the run needs anyway executes exactly once — inside this run's
     //    own caches (built in full by their first reader) or on the
-    //    final write — never a count() of its own. Nothing may call
-    //    `.rdd` on an observed frame: that leaves its count at 0;
+    //    final write ([[StageCounter]]);
     //  - only what a later stage reads twice is cached: the exact
     //    survivors (signatures, the near-dup survivor filter), the
     //    signature rel (bound, edges) and the sample (the rank's
@@ -89,15 +88,8 @@ object CurateCorpus {
     //    doc_id. Caches are dropped once the chunks are written.
     val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = { val c = df.cache(); pinned += c; c }
-    val counts = scala.collection.mutable.Map.empty[String, Observation]
-    def observed(df: DataFrame, name: String): DataFrame = {
-      val o = Observation()
-      counts(name) = o
-      df.observe(o, count(lit(1)).as("n"))
-    }
-    def countOf(name: String): Long =
-      scala.concurrent.Await.result(counts(name).future,
-        scala.concurrent.duration.Duration(5, "min")).getAs[Long]("n")
+    val counts = new StageCounter
+    import counts.{countOf, observed}
     try {
       // 1. quality: the rule battery is a per-doc predicate, filtered in
       // place; the optional LM gate composes here

@@ -6,21 +6,20 @@ import graft.model.Job
 import graft.parse.ConfParsing
 import graft.usage.UsageEtl
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The batch-ETL entry point — the reference's `ProcessLogs.main`
   * (`hadoop/src/java/com/linkedin/whiteelephant/ProcessLogs.java:114-158`)
   * re-expressed as ONE Spark application per run instead of a 20-thread
-  * pool of per-day MapReduce jobs:
+  * pool of per-day MapReduce jobs: stage 1 runs beside the 2 → 3 chain.
   *
   *   1. parse job-conf XMLs          (ParseJobConfs)
   *   2. parse + assemble job trees   (ParseJobsFromLogs)
   *   3. hour-prorated usage cube     (ComputeUsagePerHour)
   *
-  * The reference's per-day job fan-out existed to bound MR job size and
-  * enable incremental skip; here a single partitioned read covers all
-  * selected days (Catalyst prunes partitions), incremental skip is the
+  * One read covers all selected days, incremental skip is the
   * driver-side [[IncrementalPlanner]], and the staged-output atomic
   * rename is dynamic partition overwrite.
   *
@@ -38,64 +37,95 @@ object ProcessLogs {
       numDays: Int = 100,       // base.properties:17
       numDaysForced: Int = 5,   // base.properties:21
       today: LocalDate = null,
-      /** Output files per (cluster, date) dir for the jobs table —
-        * the write-parallelism ↔ small-files dial. 4 keeps a big
-        * day's write parallel while bounding file count at
-        * days × filesPerDay (vs days × shuffle-tasks without the
-        * pre-write repartition). */
+      /** Output files per (cluster, date) dir of the jobs and confs
+        * tables — the write-parallelism ↔ small-files dial. */
       filesPerDay: Int = 4)
 
-  /** Day-partition glob for one cluster+date (all queues). */
-  private def dayGlob(logsRoot: String, cluster: String, d: LocalDate): String =
-    f"$logsRoot/$cluster/daily/*/${d.getYear}%04d/${d.getMonthValue}%02d${d.getDayOfMonth}%02d"
+  /** Rows written by one [[run]]: conf records, assembled jobs, hourly
+    * usage rows before aggregation, usage fact rows. */
+  final case class EtlCounts(confs: Long, jobs: Long, hourlyRows: Long, factRows: Long)
 
-  /** Stage 2: parse+assemble the selected day-partitions of one
-    * cluster into merged job trees. */
-  def parseJobs(spark: SparkSession, cfg: Config, cluster: String,
-      days: Seq[LocalDate]): Dataset[Job] = {
-    implicit val s: SparkSession = spark
-    val globs = days.map(d => dayGlob(cfg.logsRoot, cluster, d) + "/*.log")
-    val existing = existingGlobs(spark, globs)
-    if (existing.isEmpty) spark.emptyDataset[Job](jobEncoder(spark))
-    else JobAssembly.assembleJobs(spark.read.textFile(existing: _*), cluster)
-  }
-
-  /** Globs that match at least one path — absent day dirs are skipped
-    * with a log line (the reference skips absent inputs,
-    * `JobStatsProcessing.java:69-90`). */
-  private def existingGlobs(spark: SparkSession, globs: Seq[String]): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    globs.filter { g =>
-      val p = new org.apache.hadoop.fs.Path(g)
-      val found = p.getFileSystem(conf).globStatus(p) match {
-        case null => false
-        case st => st.nonEmpty
+  /** The window's day dirs `<cluster>/daily/<queue>/<yyyy>/<MMdd>`, all
+    * queues, listed ONCE: one globStatus whose pattern names the
+    * window's clusters, years and days, so the globber lists per level,
+    * not per (cluster, day); what the year × day cross product matches
+    * outside the window is dropped. Absent (cluster, day)s are skipped
+    * with a log line (as the reference, `JobStatsProcessing.java:69-90`). */
+  private def windowDirs(spark: SparkSession, logsRoot: String,
+      clusterDays: Seq[(String, LocalDate)]): Seq[String] =
+    if (clusterDays.isEmpty) Nil else {
+      def alt(xs: Seq[String]) = xs.distinct.mkString("{", ",", "}")
+      def day(d: LocalDate) = f"${d.getYear}%04d/${d.getMonthValue}%02d${d.getDayOfMonth}%02d"
+      val days = clusterDays.map(p => day(p._2))
+      val pattern = new Path(s"$logsRoot/${alt(clusterDays.map(_._1))}/daily/*/" +
+        s"${alt(days.map(_.take(4)))}/${alt(days.map(_.drop(5)))}")
+      val found = Option(pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .globStatus(pattern)).fold(Seq.empty[Path])(_.toSeq.map(_.getPath))
+        .groupBy { p => val year = p.getParent
+          (year.getParent.getParent.getParent.getName, s"${year.getName}/${p.getName}") }
+      clusterDays.flatMap { case (c, d) =>
+        val dirs = found.getOrElse((c, day(d)), Nil)
+        if (dirs.isEmpty) log.info(s"skipping absent input: $logsRoot/$c/daily/*/${day(d)}")
+        dirs.map(_.toString)
       }
-      if (!found) log.info(s"skipping absent input: $g")
-      found
     }
+
+  /** `side` on a thread created here, `main` on the caller's: the
+    * reference's fail-fast executor (`StagedOutputJobExecutor.java:38-66`)
+    * for two independent stages. A new (not pooled) thread inherits the
+    * caller's SparkContext local properties and session, so its jobs
+    * keep the caller's job group. A failing `main` cancels the side's
+    * jobs by tag; the side is joined before this returns or throws, and
+    * `main`'s failure wins with the side's added as suppressed. A
+    * failing side lets `main` finish, then fails the call. */
+  private def beside[A](spark: SparkSession, name: String)(side: => Unit)(main: => A): A = {
+    val sc = spark.sparkContext
+    val tag = s"$name-${java.util.UUID.randomUUID()}"
+    val sideError = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val thread = new Thread(() =>
+      try { sc.addJobTag(tag); side } catch { case e: Throwable => sideError.set(e) }, name)
+    thread.start()
+    def join(): Unit = {
+      var interrupted = false
+      while (thread.isAlive)
+        try thread.join() catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread.interrupt()
+    }
+    val result = try main catch {
+      case e: Throwable =>
+        sc.cancelJobsWithTag(tag)
+        join()
+        Option(sideError.get).foreach(e.addSuppressed)
+        throw e
+    }
+    join()
+    Option(sideError.get).foreach(e => throw e)
+    result
   }
 
-  private def jobEncoder(spark: SparkSession) = {
-    import spark.implicits._
-    implicitly[org.apache.spark.sql.Encoder[Job]]
-  }
+  /** One output table by cluster/date under DYNAMIC overwrite (the
+    * staged-output rename: a forced-window re-run replaces its days, T5)
+    * at filesPerDay files per day dir: unrepartitioned, every shuffle
+    * task writes every day (6 040 files for 142 MB in the 100-day
+    * rehearsal); the `salt` hash keeps a big day's write parallel. */
+  private def writeDays(df: DataFrame, salt: String, cfg: Config, table: String): Unit =
+    df.repartition(col("cluster"), col("date"), pmod(hash(col(salt)), lit(cfg.filesPerDay)))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("cluster", "date")
+      .parquet(s"${cfg.outputRoot}/$table")
 
   /** Full run — confs, jobs, usage — each written as parquet
-    * partitioned by cluster/date with dynamic overwrite.
+    * partitioned by cluster/date with dynamic overwrite; returns the
+    * rows written, observed on the writes themselves.
     *
-    * Fleet shape: incremental planning stays PER CLUSTER (each
-    * cluster's output state differs) but is driver-side metadata only;
-    * every Spark stage below covers the WHOLE fleet in one job, with
-    * the cluster recovered from the input file path
-    * (`<logsRoot>/<cluster>/daily/…`). The earlier per-cluster loop
-    * was an O(clusters) sequential driver cost — at fleet scale
-    * (dozens of clusters) the fixed costs dominate exactly like the
-    * per-day loops this round removed. */
-  def run(spark: SparkSession, cfg: Config): Unit = {
+    * Incremental planning stays PER CLUSTER (each cluster's output
+    * state differs) but is driver-side metadata only; every Spark stage
+    * covers the WHOLE fleet, with the cluster recovered from the input
+    * file path (`<logsRoot>/<cluster>/daily/…`). */
+  def run(spark: SparkSession, cfg: Config): EtlCounts = {
     implicit val s: SparkSession = spark
     import spark.implicits._
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val today = Option(cfg.today).getOrElse(LocalDate.now())
     val usageOut = s"${cfg.outputRoot}/usage"
     // ONE partition listing for the whole fleet, not clusters × days
@@ -107,64 +137,42 @@ object ProcessLogs {
         d => present((cluster, d.toString)))
         .map(p => cluster -> p.date)
     }
+    val dirs = windowDirs(spark, cfg.logsRoot, clusterDays)
+    val counts = new StageCounter
 
-    // stage 1: job confs — ONE multi-path binaryFile load for the
-    // whole fleet's window (each separate load() costs a driver
-    // analysis + listing + _spark_metadata probe, ~0.15 s — the
-    // per-day form was ~2/3 of the 100-day rehearsal's conf-stage
-    // wall). Written like jobs/usage: parquet partitioned by
-    // cluster/date under DYNAMIC overwrite, so re-running the forced
-    // trailing window (T5) replaces those day partitions instead of
-    // appending duplicate conf rows.
-    val confDirs = existingGlobs(spark,
-      clusterDays.map { case (c, d) => dayGlob(cfg.logsRoot, c, d) })
-    if (confDirs.nonEmpty) {
-      ConfParsing.parseConfDirsAuto(confDirs).toDF()
-        .withColumn("date", to_date(regexp_extract(col("path"),
-          "/(\\d{4})/(\\d{2})(\\d{2})/", 0), "/yyyy/MMdd/"))
-        // trade the reference's map-only shape for a cheap shuffle:
-        // pins files/day-dir at filesPerDay instead of
-        // read-tasks-touching-that-day (same small-files fix as the
-        // jobs write below)
-        .repartition(col("cluster"), col("date"),
-          pmod(hash(col("path")), lit(cfg.filesPerDay)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cluster", "date")
-        .parquet(s"${cfg.outputRoot}/confs")
+    // stage 1: job confs, beside stages 2-3 (they share no input, output
+    // or cache) — ONE binaryFile load for the fleet's window (a per-day
+    // load() was ~2/3 of the 100-day rehearsal's conf-stage wall)
+    beside(spark, "graft-process-logs-confs") {
+      if (dirs.nonEmpty)
+        writeDays(counts.observed(ConfParsing.parseConfDirsAuto(dirs).toDF(), "confs")
+          .withColumn("date", to_date(regexp_extract(col("path"),
+            "/(\\d{4})/(\\d{2})(\\d{2})/", 0), "/yyyy/MMdd/")), "path", cfg, "confs")
+    } {
+      // stage 2: merged job trees — one read of the window's `*.log` text,
+      // ONE (cluster, jobId) shuffle, assembled once: the jobs write builds
+      // the cache and stage 3 reads it (the reference's stage order)
+      val jobs = (
+        if (dirs.isEmpty) spark.emptyDataset[Job]
+        else JobAssembly.assembleJobsMulti(
+          spark.read.option("pathGlobFilter", "*.log").textFile(dirs: _*)
+            .select(regexp_extract(input_file_name(),
+              "([^/]+)/daily/", 1).as("_1"), col("value").as("_2"))
+            .as[(String, String)])).persist()
+      try {
+        writeDays(counts.observed(jobs.toDF(), "jobs")
+          .withColumn("date", to_date(timestamp_millis(
+            coalesce(col("submitTime"), col("launchTime"), col("finishTime"))))),
+          "jobId", cfg, "jobs")
+        // stage 3: hourly usage cube (fleet-wide — the stats key
+        // carries the cluster)
+        UsageEtl.writeFact(counts.observed(UsageEtl.aggregate(
+          counts.observed(UsageEtl.hourlyRecords(jobs), "hourlyRows")), "factRows"),
+          usageOut)
+      } finally jobs.unpersist()
     }
-
-    // stage 2: merged job trees — one textFile read + ONE
-    // (cluster, jobId) shuffle for every selected (cluster, day)
-    val logGlobs = existingGlobs(spark,
-      clusterDays.map { case (c, d) => dayGlob(cfg.logsRoot, c, d) + "/*.log" })
-    val jobs =
-      if (logGlobs.isEmpty) spark.emptyDataset[Job](jobEncoder(spark))
-      else JobAssembly.assembleJobsMulti(
-        spark.read.textFile(logGlobs: _*)
-          .select(regexp_extract(input_file_name(),
-            "([^/]+)/daily/", 1).as("_1"), col("value").as("_2"))
-          .as[(String, String)])
-    jobs.toDF()
-      .withColumn("date", to_date(timestamp_millis(
-        coalesce(col("submitTime"), col("launchTime"), col("finishTime")))))
-      // pin files/day-dir: the assembly shuffle is keyed on jobId, so
-      // without this every task holds every day and the write emits
-      // tasks × days small files (measured 6 040 files for 142 MB in
-      // the 100-day rehearsal — the dominant remaining fixed cost).
-      // filesPerDay salts the repartition so a big day still writes
-      // in parallel.
-      .repartition(col("cluster"), col("date"),
-        pmod(hash(col("jobId")), lit(cfg.filesPerDay)))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cluster", "date")
-      .parquet(s"${cfg.outputRoot}/jobs")
-
-    // stage 3: hourly usage cube (fleet-wide — the stats key carries
-    // the cluster)
-    val fact = UsageEtl.usageFact(jobs)
-    UsageEtl.writeFact(fact, usageOut)
+    EtlCounts(if (dirs.isEmpty) 0L else counts.countOf("confs"),
+      counts.countOf("jobs"), counts.countOf("hourlyRows"), counts.countOf("factRows"))
   }
 
   /** S6 interop: write a usage fact ADDITIONALLY in the reference's
@@ -178,10 +186,6 @@ object ProcessLogs {
     * inverse (ingesting an existing deployment's history) is
     * [[graft.sources.AvroKv.readUsageFact]] on the same root. */
   def exportUsageAvro(fact: DataFrame, avroRoot: String): Unit =
-    // ONE Spark job for all (cluster, day) containers — the old
-    // driver loop ran one full-fact-filter job per day (O(days × fact)
-    // scans + ~0.3 s job fixed cost each: the measured ~60 s of the
-    // 100-day rehearsal's 80 s wall, STRESS.md round 10)
     graft.sources.AvroKv.writeUsageFactByDay(
       fact.withColumn("date",
         to_date(timestamp_millis(col("time")))),

@@ -3,6 +3,7 @@ package graft.etl
 import graft.model._
 import graft.parse.LineParsing
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Stage 1+2 of the pipeline: raw history-log lines → merged [[Job]] trees.
   *
@@ -203,53 +204,29 @@ object JobAssembly {
       tasks = tasks)
   }
 
-  /** Distributed assembly: one shuffle on jobId, then per-group tree
-    * building. Scale note: group size is bounded by tasks-per-job (max
-    * ~100k attempts for a monster job ⇒ fits an executor); jobId count
-    * is huge ⇒ good key cardinality, no skew expected. AQE coalesces
-    * post-shuffle partitions at small SF.
-    */
+  /** One cluster's lines: [[assembleJobsMulti]] with the cluster as a
+    * constant tag. */
   def assembleJobs(lines: Dataset[String], cluster: String)(
       implicit spark: SparkSession): Dataset[Job] = {
     import spark.implicits._
-    // A sealed-trait union has no Spark Encoder; shuffle a sparse
-    // (jobId, Option×3) row instead — same heterogenous-cogroup shape as
-    // the reference's Avro union (`LogData.avsc:30-139`), Encoder-native.
-    val parsed: Dataset[(String, Option[JobLine], Option[TaskLine], Option[AttemptLine])] =
-      lines.flatMap { raw =>
-        LineParsing.parseLine(raw).map {
-          case LineParsing.PJob(j)     => (j.jobId, Some(j), None, None)
-          case LineParsing.PTask(t)    => (t.jobId, None, Some(t), None)
-          case LineParsing.PAttempt(a) => (a.jobId, None, None, Some(a))
-        }
-      }
-    parsed
-      .groupByKey(_._1)
-      .mapGroups { (jobId, it) =>
-        val js = Seq.newBuilder[JobLine]
-        val ts = Seq.newBuilder[TaskLine]
-        val as = Seq.newBuilder[AttemptLine]
-        it.foreach {
-          case (_, Some(j), _, _) => js += j
-          case (_, _, Some(t), _) => ts += t
-          case (_, _, _, Some(a)) => as += a
-          case _                  => ()
-        }
-        assemble(jobId, cluster, js.result(), ts.result(), as.result())
-      }
+    assembleJobsMulti(lines.toDF("_2")
+      .select(lit(cluster).as("_1"), col("_2")).as[(String, String)])
   }
 
   /** Multi-cluster assembly in ONE shuffle: lines arrive tagged with
     * their cluster (derived from the input file path by the caller)
     * and the group key is (cluster, jobId) — jobIds are only unique
     * within a cluster (every Hadoop cluster counts `job_<ts>_<seq>`
-    * from its own JobTracker epoch). The per-cluster
-    * [[assembleJobs]] form means one Spark job per cluster — an
-    * O(clusters) sequential driver cost at fleet scale; this form
-    * keeps the whole fleet's window in a single job. */
+    * from its own JobTracker epoch) — one Spark job for the whole
+    * fleet's window, not one per cluster. Group size is bounded by
+    * tasks-per-job (~100k attempts for a monster job fits an executor)
+    * and jobIds are many, so the key has no skew to expect. */
   def assembleJobsMulti(lines: Dataset[(String, String)])(
       implicit spark: SparkSession): Dataset[Job] = {
     import spark.implicits._
+    // A sealed-trait union has no Spark Encoder; shuffle a sparse
+    // (key, Option×3) row instead — same heterogenous-cogroup shape as
+    // the reference's Avro union (`LogData.avsc:30-139`), Encoder-native.
     val parsed: Dataset[(String, String, Option[JobLine], Option[TaskLine], Option[AttemptLine])] =
       lines.flatMap { case (cluster, raw) =>
         LineParsing.parseLine(raw).map {

@@ -1,9 +1,11 @@
 package graft
 
-import graft.app.ProcessLogs
+import graft.app.{ProcessLogs, StageCounter}
 import graft.serve.{QueryType, UsageQueries}
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import java.time.LocalDate
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -119,5 +121,110 @@ class ProcessLogsSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/confs").count() == 1)
     assert(spark.read.parquet(s"$out/jobs").count() == 1)
     assert(spark.read.parquet(s"$out/usage").count() == 1)
+  }
+
+  /** One cluster-day of the first case's fixture (one job, one conf,
+    * an attempt spanning two hours) under a fresh root; returns the
+    * output root and the run's config. */
+  private def fixture(prefix: String): (Path, ProcessLogs.Config) = {
+    val root = Files.createTempDirectory(prefix)
+    val logs = root.resolve("logs")
+    val out = root.resolve("out")
+    val day = logs.resolve("prod/daily/default/2024/0110")
+    Files.createDirectories(day)
+    val h8 = 1704873600000L
+    Files.write(day.resolve("history.log"), Seq(
+      s"""Job JOBID="job_9_1" JOBNAME="etl" USER="carol" SUBMIT_TIME="$h8" JOB_QUEUE="default" .""",
+      s"""Job JOBID="job_9_1" FINISH_TIME="${h8 + 5400000}" JOB_STATUS="SUCCESS" .""",
+      s"""MapAttempt TASK_TYPE="MAP" TASKID="task_9_1_m_000000" TASK_ATTEMPT_ID="attempt_9_1_m_000000_0" START_TIME="$h8" .""",
+      s"""MapAttempt TASK_TYPE="MAP" TASKID="task_9_1_m_000000" TASK_ATTEMPT_ID="attempt_9_1_m_000000_0" TASK_STATUS="SUCCESS" FINISH_TIME="${h8 + 5400000}" ."""
+    ).mkString("\n").getBytes("UTF-8"))
+    Files.write(day.resolve("job_9_1_conf.xml"),
+      "<configuration><property><name>k</name><value>v</value></property></configuration>"
+        .getBytes("UTF-8"))
+    (out, ProcessLogs.Config(logs.toString, out.toString, Seq("prod"),
+      numDays = 10, numDaysForced = 2, today = LocalDate.of(2024, 1, 15)))
+  }
+
+  /** Stages submitted by `body` whose RDDs include a scan of the text
+    * source, counted by a listener under a job group of their own. */
+  private def textScanStages(body: => Unit): Seq[String] = {
+    val group = "process-logs-spec-scans"
+    val scans = new ConcurrentLinkedQueue[String]
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageInfo.rddInfos.flatMap(_.scope).map(_.name)
+            .find(_.toLowerCase.startsWith("scan text"))
+            .foreach(n => scans.add(s"stage ${e.stageInfo.stageId}: $n"))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "marker"))
+          marker.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "counted run")
+      try body finally spark.sparkContext.clearJobGroup()
+      // the listener bus is FIFO: once the marker job's start arrives,
+      // every stage of the counted run has been seen
+      spark.sparkContext.setJobGroup("marker", "listener barrier")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      assert(marker.await(60, TimeUnit.SECONDS))
+      scans.asScala.toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("one run scans the log text once") {
+    val (_, cfg) = fixture("graft_scans")
+    val scans = textScanStages(ProcessLogs.run(spark, cfg))
+    assert(scans.size == 1, scans.mkString("; "))
+  }
+
+  test("run returns the rows it wrote, leaves no cache and no session conf behind") {
+    val (out, cfg) = fixture("graft_counts")
+    spark.catalog.clearCache()
+    val conf = spark.conf.getAll
+    val counts = ProcessLogs.run(spark, cfg)
+    assert(counts == ProcessLogs.EtlCounts(confs = 1, jobs = 1, hourlyRows = 2, factRows = 2))
+    assert(spark.read.parquet(s"$out/jobs").count() == counts.jobs)
+    assert(spark.read.parquet(s"$out/confs").count() == counts.confs)
+    assert(spark.read.parquet(s"$out/usage").count() == counts.factRows)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(spark.conf.getAll == conf)
+  }
+
+  /** Runs `cfg` with the output table `table` blocked by a regular
+    * file, so its write fails; returns the output root. */
+  private def runBlocked(table: String): Path = {
+    val (out, cfg) = fixture(s"graft_${table}_fail")
+    Files.createDirectories(out)
+    Files.write(out.resolve(table), "not a directory".getBytes("UTF-8"))
+    intercept[Exception](ProcessLogs.run(spark, cfg))
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.isAlive && t.getName.startsWith("graft-process-logs")))
+    out
+  }
+
+  test("a failing conf stage fails the run after the job-log writes, with no thread left") {
+    val out = runBlocked("confs")
+    assert(spark.read.parquet(s"$out/jobs").count() == 1)
+    assert(spark.read.parquet(s"$out/usage").count() == 2)
+  }
+
+  test("a failing jobs write fails the run, joins the conf stage and releases the cache") {
+    spark.catalog.clearCache()
+    val out = runBlocked("jobs")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(!Files.exists(out.resolve("usage")))
+  }
+
+  test("a stage count read before its action fails in seconds, naming the stage") {
+    val counts = new StageCounter
+    counts.observed(spark.range(3).toDF(), "never-run")
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](counts.countOf("never-run"))
+    assert((System.nanoTime() - t0) / 1e9 < 30.0)
+    assert(e.getMessage.contains("never-run"))
   }
 }
